@@ -786,9 +786,11 @@ BUDGET_R14_OPT = {
 # fix) and predates the trained-index consolidation of its MV.
 BUDGET_R15 = {
     "d57_span_strip": 0.95,        # run-B med 0.586 / run-A 0.636
-                              # (was 1.15; r15 span-free-skip rewrite;
-                              # recipe off the worse calm median).
-                              # LEAVES the >1 s registry.
+                              # (was 1.15; r15 span-free-skip rewrite).
+                              # Deliberately BELOW the recipe: roundup05
+                              # (1.5 x 0.636) = 1.0, tightened to 0.95
+                              # so d57 leaves the >1 s registry
+                              # (PINS_ABOVE_WORKING_BUDGET).
     "d36_hard_negatives": 0.65,    # run-B med 0.339, run-A 0.421
                               # (was 0.8; single-exchange wiring —
                               # kernel evaluated once, recipe off the

@@ -275,6 +275,8 @@ def _assign_arrow(
     cb_rows = (
         codebook.select(cid_col, cvec_col).orderBy(cid_col).collect()
     )
+    if any(r[1] is None for r in cb_rows):
+        raise ValueError(f"_assign_arrow: null centroid in column {cvec_col!r}")
     cids_l = [r[0] for r in cb_rows]
     cmat_l = [list(r[1]) for r in cb_rows]
     bc = spark.sparkContext.broadcast((cids_l, cmat_l))
@@ -318,10 +320,18 @@ def _assign_arrow(
             # zero-copy float64 view, reshape restores (n, D). Same
             # float64 bit patterns as the old to_pylist round trip
             # (parity pinned by tests/test_r14_opt.py), without
-            # materializing n Python lists per batch.
-            V = np.asarray(b.column(vec_col).flatten(), dtype=np.float64).reshape(
-                b.num_rows, -1
-            )  # (n, D)
+            # materializing n Python lists per batch. A null vector (or
+            # coordinate) would be dropped by flatten() and surface as an
+            # opaque reshape error (or a NaN argmax), so it raises here.
+            vecs_col = b.column(vec_col)
+            flat = vecs_col.flatten()
+            if vecs_col.null_count or flat.null_count:
+                raise ValueError(
+                    f"_assign_arrow: null vector or coordinate in column "
+                    f"{vec_col!r} — cosine undefined (declarative Divide "
+                    "would yield NULL)"
+                )
+            V = np.asarray(flat, dtype=np.float64).reshape(b.num_rows, -1)  # (n, D)
             n_rows = V.shape[0]
             acc = np.zeros((n_rows, k))
             for i in range(D):
@@ -786,8 +796,7 @@ _D25B_CM_SQL = """
 # probes selected by deterministic md5 rank + LIMIT, not the old
 # `vec_id % 50` corpus fraction, so per-query search work stops growing
 # linearly with the corpus and the bound lives in the plan
-# (TakeOrderedAndProject). The same probe ids select under the stub and
-# the trained codebook, so recall comparisons stay row-for-row.
+# (TakeOrderedAndProject).
 IVF_PROBES = 40
 
 # The trained-default oracle preamble: ppb fixed-point vectors (with
@@ -832,9 +841,8 @@ _TRAINED_ADC_JOINS_SQL = "\n".join(
 _TRAINED_ADC_SUM_SQL = " + ".join(f"dt{s}.td_{s}" for s in range(1, PQ_M + 1))
 
 # The full trained IVF-PQ recall chain (PQ top-3 vs exact in-cell
-# top-3 per probe) — shared verbatim by d25 (trained default) and d25b
-# (the explicit trained leg): identical oracle text is the contract
-# that the two independently-shaped Spark plans compute the same thing.
+# top-3 per probe) — the one oracle of d25_ann_recall, which is also
+# registered as d25b_ann_recall_trained.
 _TRAINED_RECALL_ORACLE = f"""
     WITH {_TRAINED_PREAMBLE_SQL},
     codes AS (
@@ -1188,12 +1196,12 @@ def _sign_bucket_spark(nbits: int) -> F.Column:
 
 
 def _ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The deterministic STUB codebook: every 100th vector. Since r10
-    the search family defaults to the d49-trained codebook
-    (_trained_centroids); this one survives for the codebook="stub"
-    recall-comparability flag and the d44/d47 cell-partition
-    consumers. Its k ~ n/100 makes assignment ~n^2/100 — the named
-    super-linear term the trained default retires."""
+    """The deterministic every-100th-vector codebook. Its k ~ n/100
+    cells partition the corpus for the cell-local operators (d44,
+    d44b, d47) and the streaming semantic-decontamination gate; the
+    IVF/PQ search family reads the d49-trained codebook instead
+    (_trained_centroids). k ~ n/100 makes assignment ~n^2/100 — the
+    named super-linear term of this index."""
     emb = load_table(spark, sf_dir, "embeddings")
     return F.broadcast(
         emb.where(F.col("vec_id") % 100 == 0).select(
@@ -1203,19 +1211,16 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The IVF index: every vector assigned to its max-cosine centroid
-    cell. argmax-per-vector as an AGGREGATE, not a row_number window:
-    the window formulation shuffles+sorts the full n*k assignment
-    relation, while groupBy gets map-side partial aggregation and
-    shuffles ~n rows — a ~k x shuffle-volume difference at scale.
-    max_by orders by (cosine desc, cid asc) via the (-cid) struct
-    field, matching the oracle's ORDER BY ... DESC, c.cid LIMIT 1.
+    """Every vector assigned to its max-cosine `_ivf_centroids` cell
+    (vec_id, label, embedding, cell, norm): argmax per vector with
+    ties to the smaller cid, matching the oracle's ORDER BY ... DESC,
+    c.cid LIMIT 1.
 
-    Stored through the MV seam: it is an index — real systems build it
-    once and store it. Consumers since r10: d44/d47's cell-local ops
-    (which want an n/100-cell partition of the corpus) and the
-    codebook="stub" flag paths of the search family (whose default
-    moved to the trained index, _trained_assigned)."""
+    Stored through the MV seam (store key d8_assigned_v2, warmed by
+    the refresh DAG's d8_assigned step): it is an index — real systems
+    build it once and store it. Consumers: d44/d44b/d47's cell-local
+    ops and streaming/semdecontam.py, which want an n/100-cell
+    partition of the corpus."""
     from .relcache import cached_relation
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1243,6 +1248,139 @@ def _ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cached_relation("d8_assigned_v2", sf_dir, _build_assigned)
 
 
+def _ivf_probe_set(rel: DataFrame) -> DataFrame:
+    """The ANN family's bounded probe set: deterministic md5-rank top-K
+    over a vec_id relation (IVF_PROBES rows at any corpus size,
+    TakeOrderedAndProject in the plan)."""
+    return rel.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id").limit(
+        IVF_PROBES
+    )
+
+
+def _ivf_probes(assigned: DataFrame) -> DataFrame:
+    """The probe select of the trained index (query_id, qe, qcell,
+    qnorm). Every IVF search, audit and d66's sweep kernel reads this
+    one select, so all of them score the same probe ids."""
+    return _ivf_probe_set(assigned).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qe"),
+        F.col("cell").alias("qcell"),
+        F.col("vnorm").alias("qnorm"),
+    )
+
+
+def _ivf_candidates(
+    spark: SparkSession, sf_dir: str, scores: tuple[str, ...], nprobe: int = 1
+) -> DataFrame:
+    """THE scored in-cell candidate relation of the IVF search family:
+    (query_id, candidate_id, label, cell, *scores) — every bounded
+    probe paired with every other vector of a cell it probes, in the
+    stored trained index (_trained_assigned). d8/d14/d24 rank it;
+    d25/d25b audit both rankings over it.
+
+    Routing: nprobe=1 joins on the probe's stored cell; nprobe>1 joins
+    on its nprobe max-cosine trained centroids (a window over the bounded
+    probes x broadcast k-row codebook fan-out, ties to the smaller
+    cid, as the oracle's ORDER BY ... DESC, m.cid). A candidate sits
+    in exactly one cell, so probed cells yield disjoint candidate
+    sets — no dedup pass. The probe side is broadcast (IVF_PROBES x
+    nprobe rows), so the search is one BroadcastHashJoin on the cell
+    key at any corpus size.
+
+    ``scores`` names the columns to compute, in output order:
+      - "cosine": exact cosine — one `_dot_spark` left fold per pair
+        over the stored L2 norms (the sqrt of that same fold, d3's
+        store-the-norm trick), bit-equal to the oracle's expression;
+      - "adc": PQ asymmetric distance. The probe's distance table
+        (k x PQ_M sub-distances, probes x broadcast codebook) folds
+        into ONE row per probe — a {centroid -> [td_1..td_M]} map —
+        and is broadcast, so every candidate scores with PQ_M hash
+        lookups on its stored codes and never touches its floats (the
+        IVF-PQ execution model, Jegou et al., TPAMI 2011). Map content
+        does not depend on collect_list order (cids are unique per
+        probe), and the lookups sum left-associatively, the oracle's
+        dt1.td_1 + ... + dtM.td_M IEEE order."""
+    assigned = _trained_assigned(spark, sf_dir)
+    probes = routed = _ivf_probes(assigned)
+    route = "qcell"
+    if nprobe > 1:
+        cos_to_centroid = _dot_spark(F.col("qe"), F.col("ce")) / (
+            F.sqrt(_dot_spark(F.col("qe"), F.col("qe")))
+            * F.sqrt(_dot_spark(F.col("ce"), F.col("ce")))
+        )
+        w = Window.partitionBy("query_id").orderBy(
+            cos_to_centroid.desc(), F.col("cid")
+        )
+        routed = (
+            probes.join(F.broadcast(_trained_centroids(spark, sf_dir)))
+            .withColumn("prk", F.row_number().over(w))
+            .where(F.col("prk") <= nprobe)
+            .select("query_id", "qe", "qnorm", F.col("cid").alias("pcell"))
+        )
+        route = "pcell"
+    cand = assigned.select(
+        F.col("vec_id").alias("candidate_id"),
+        "label",
+        F.col("v").alias("ce2"),
+        "cell",
+        F.col("vnorm").alias("cnorm"),
+        *[F.col(f"code_{s}") for s in range(1, PQ_M + 1)],
+    )
+    joined = F.broadcast(routed).join(
+        cand,
+        (F.col("cell") == F.col(route))
+        & (F.col("candidate_id") != F.col("query_id")),
+    )
+    cols = {}
+    if "cosine" in scores:
+        cols["cosine"] = _dot_spark(F.col("qe"), F.col("ce2")) / (
+            F.col("qnorm") * F.col("cnorm")
+        )
+    if "adc" in scores:
+        dt = probes.join(F.broadcast(_trained_centroids(spark, sf_dir))).select(
+            "query_id",
+            "cid",
+            *[
+                _sql2_spark(
+                    F.slice(F.col("qe"), (s - 1) * PQ_SUBDIM + 1, PQ_SUBDIM),
+                    F.slice(F.col("ce"), (s - 1) * PQ_SUBDIM + 1, PQ_SUBDIM),
+                ).alias(f"td_{s}")
+                for s in range(1, PQ_M + 1)
+            ],
+        )
+        dtm = dt.groupBy("query_id").agg(
+            F.map_from_entries(
+                F.collect_list(
+                    F.struct(
+                        F.col("cid"),
+                        F.array(*[F.col(f"td_{s}") for s in range(1, PQ_M + 1)]),
+                    )
+                )
+            ).alias("tdm")
+        ).withColumnRenamed("query_id", "tq")
+        joined = joined.join(F.broadcast(dtm), F.col("tq") == F.col("query_id"))
+        terms = [
+            F.element_at(F.col("tdm"), F.col(f"code_{s}"))[s - 1]
+            for s in range(1, PQ_M + 1)
+        ]
+        cols["adc"] = sum(terms[1:], terms[0])
+    return joined.select(
+        "query_id", "candidate_id", "label", "cell",
+        *[cols[s].alias(s) for s in scores],
+    )
+
+
+def _ivf_top3(scored: DataFrame, order: F.Column) -> DataFrame:
+    """Top-3 candidates per probe by `order`, ties to the smaller
+    candidate_id; rank is INT like the oracle's CAST(rank AS INTEGER)."""
+    w = Window.partitionBy("query_id").orderBy(order, F.col("candidate_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= 3)
+        .withColumn("rank", F.col("rank").cast("int"))
+    )
+
+
 @query(
     "d8_ann_ivf",
     oracle=f"""
@@ -1263,70 +1401,18 @@ def _ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked WHERE rank <= 3
     """,
 )
-def d8_ann_ivf(
-    spark: SparkSession, sf_dir: str, codebook: str = "trained"
-) -> DataFrame:
+def d8_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN (the other scale path beside d5's sign-LSH):
-    every vector assigned to its max-cosine centroid cell, bounded
-    md5-rank probes search ONLY their own cell.
-
-    ``codebook`` (VERDICT r9 #4 — trained is the DEFAULT): "trained"
-    reads the d49-Lloyd-trained index MV (corpus-scaled sqrt-law cell
-    count `d49_cells(n)`, r12 — 16 cells at the test SFs, 65536 max,
-    so the n x k assignment stays ~ n^1.5-bounded and per-cell scans
-    shrink as the corpus grows); "stub" keeps the reference's deliberate
-    every-100th-vector codebook for recall-comparability runs — its
-    k ~ n/100 makes the assignment ~n^2/100, which is exactly why the
-    stub lives behind the flag and not in the registry. The oracle
-    (trained path) unrolls the full training chain, so the gate
-    re-proves the stored index equals retraining from scratch."""
-    if codebook == "stub":
-        assigned = _ivf_assigned(spark, sf_dir)
-        q = _ivf_probe_set(assigned).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            F.col("cell").alias("qcell"),
-            F.col("norm").alias("qnorm"),
-        )
-        c = assigned.select(
-            F.col("vec_id").alias("candidate_id"),
-            "label",
-            F.col("embedding").alias("ce2"),
-            "cell",
-            F.col("norm").alias("cnorm"),
-        )
-    else:
-        assigned = _trained_assigned(spark, sf_dir)
-        q = _ivf_probe_set(assigned).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qe"),
-            F.col("cell").alias("qcell"),
-            F.col("vnorm").alias("qnorm"),
-        )
-        c = assigned.select(
-            F.col("vec_id").alias("candidate_id"),
-            "label",
-            F.col("v").alias("ce2"),
-            "cell",
-            F.col("vnorm").alias("cnorm"),
-        )
-    scored = F.broadcast(q).join(
-        c, (F.col("cell") == F.col("qcell")) & (F.col("candidate_id") != F.col("query_id"))
-    ).select(
-        "query_id",
-        "candidate_id",
-        "label",
-        "cell",
-        (
-            _dot_spark(F.col("qe"), F.col("ce2"))
-            / (F.col("qnorm") * F.col("cnorm"))
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("candidate_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 3)
-        .withColumn("rank", F.col("rank").cast("int"))
+    every vector assigned to its max-cosine cell of the d49-trained
+    codebook (corpus-scaled sqrt-law cell count `d49_cells(n)`, r12 —
+    16 cells at the test SFs, 65536 max, so the n x k assignment stays
+    ~ n^1.5-bounded and per-cell scans shrink as the corpus grows);
+    bounded md5-rank probes search ONLY their own cell and keep the
+    exact-cosine top-3. The oracle unrolls the full training chain, so
+    the gate re-proves the stored index equals retraining from
+    scratch."""
+    return _ivf_top3(
+        _ivf_candidates(spark, sf_dir, ("cosine",)), F.col("cosine").desc()
     )
 
 
@@ -1933,84 +2019,19 @@ def d13_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked WHERE rank <= 3
     """,
 )
-def d14_ann_ivf_nprobe2(
-    spark: SparkSession, sf_dir: str, codebook: str = "trained"
-) -> DataFrame:
+def d14_ann_ivf_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN with nprobe=2 — the standard recall knob: each probe
     searches its TWO nearest centroid cells instead of one, recovering
     neighbors that fall just across a Voronoi boundary (d8's known
     miss mode) at ~2x the per-probe candidate cost.
 
-    Plan shape: the stored index MV (shared with d8; trained codebook
-    by default, stub behind the flag — see d8_ann_ivf) supplies both
-    candidates and probes; probe-to-cell ranking is a window over the
-    bounded probe set x broadcast-codebook fan-out (IVF_PROBES x k
-    rows — trivial); the search joins on the cell key exactly like d8.
-    A candidate belongs to exactly one cell, so the two probed cells
-    yield disjoint candidate sets — no dedup pass. At 100 TB: same
-    posture as d8, with nprobe scaling candidate volume linearly and
-    the shuffle still keyed on cell id."""
-    if codebook == "stub":
-        assigned = _ivf_assigned(spark, sf_dir)
-        centroids = _ivf_centroids(spark, sf_dir)
-        probes = _ivf_probe_set(assigned).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            F.col("norm").alias("qnorm"),
-        )
-        cand_vec, cand_norm = "embedding", "norm"
-    else:
-        assigned = _trained_assigned(spark, sf_dir)
-        centroids = F.broadcast(
-            _trained_centroids(spark, sf_dir)
-        )
-        probes = _ivf_probe_set(assigned).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qe"),
-            F.col("vnorm").alias("qnorm"),
-        )
-        cand_vec, cand_norm = "v", "vnorm"
-    cos_to_centroid = _dot_spark(F.col("qe"), F.col("ce")) / (
-        F.sqrt(_dot_spark(F.col("qe"), F.col("qe")))
-        * F.sqrt(_dot_spark(F.col("ce"), F.col("ce")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        cos_to_centroid.desc(), F.col("cid")
-    )
-    pcells = (
-        probes.join(centroids)
-        .withColumn("prk", F.row_number().over(w))
-        .where(F.col("prk") <= 2)
-        .select("query_id", "qe", "qnorm", F.col("cid").alias("pcell"))
-    )
-    cand = assigned.select(
-        F.col("vec_id").alias("candidate_id"),
-        "label",
-        F.col(cand_vec).alias("ce2"),
-        "cell",
-        F.col(cand_norm).alias("cnorm"),
-    )
-    scored = F.broadcast(pcells).join(
-        cand,
-        (F.col("cell") == F.col("pcell"))
-        & (F.col("candidate_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        "candidate_id",
-        "label",
-        "cell",
-        (
-            _dot_spark(F.col("qe"), F.col("ce2"))
-            / (F.col("qnorm") * F.col("cnorm"))
-        ).alias("cosine"),
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("candidate_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(wr))
-        .where(F.col("rank") <= 3)
-        .withColumn("rank", F.col("rank").cast("int"))
+    Plan shape: d8's candidate relation (`_ivf_candidates`) routed by
+    the probe x trained-centroid window instead of the stored cell;
+    the search still joins on the cell key. At 100 TB: same posture as
+    d8, with nprobe scaling candidate volume linearly."""
+    return _ivf_top3(
+        _ivf_candidates(spark, sf_dir, ("cosine",), nprobe=2),
+        F.col("cosine").desc(),
     )
 
 
@@ -2817,45 +2838,6 @@ def d22_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 # vector-fragments block near the top of the module.)
 
 
-def _pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PQ index: each vector's per-subspace nearest-centroid codes,
-    built once and stored through the MV seam (like d8's cell
-    assignment — real systems persist the codes, the floats go cold).
-    The build broadcasts the codebook (tiny by construction), computes
-    all PQ_M sub-distances in ONE fan-out pass, and argmins per
-    subspace as an AGGREGATE (min_by over a (dist, cid) struct — the
-    same shuffle-~n-not-n*k trick as `_ivf_assigned`, tie-break min
-    cid matching the oracle's ORDER BY dist, cid LIMIT 1)."""
-    from .relcache import cached_relation
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    centroids = _ivf_centroids(spark, sf_dir)
-
-    def _build() -> DataFrame:
-        dists = [
-            _sql2_spark(
-                F.slice(F.col("embedding"), (s - 1) * PQ_SUBDIM + 1, PQ_SUBDIM),
-                F.slice(F.col("ce"), (s - 1) * PQ_SUBDIM + 1, PQ_SUBDIM),
-            ).alias(f"d_{s}")
-            for s in range(1, PQ_M + 1)
-        ]
-        return (
-            emb.join(centroids)
-            .select("vec_id", "cid", *dists)
-            .groupBy("vec_id")
-            .agg(
-                *[
-                    F.min_by(
-                        F.col("cid"), F.struct(F.col(f"d_{s}"), F.col("cid"))
-                    ).alias(f"code_{s}")
-                    for s in range(1, PQ_M + 1)
-                ]
-            )
-        )
-
-    return cached_relation("d23_pq_codes", sf_dir, _build)
-
-
 @query(
     "d23_pq_codes",
     oracle=f"""
@@ -2867,26 +2849,18 @@ def _pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM vecs s
     """,
 )
-def d23_pq_codes(
-    spark: SparkSession, sf_dir: str, codebook: str = "trained"
-) -> DataFrame:
+def d23_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization code build: every vector compressed to
     PQ_M=8 nearest-centroid codes over 8-dim subspaces of the
-    codebook (d49-trained by default since r10; the every-100th-vector
-    stub behind the flag — see d8_ann_ivf). 64 floats become 8 small
-    ints: the compressed index d24 searches without touching candidate
-    floats. Output is pure integers, so cross-engine hash-exactness
-    needs only that the argmin COMPARISONS agree — and they do,
-    because each sub-distance is the identical left-fold IEEE
-    expression on both engines. Steady state compiles to a scan of
-    the stored index MV (the oracle unrolls the training chain, so
-    the gate re-proves the stored codes equal a from-scratch build)."""
-    codes = (
-        _pq_codes(spark, sf_dir)
-        if codebook == "stub"
-        else _trained_assigned(spark, sf_dir)
-    )
-    return codes.select(
+    d49-trained codebook. 64 floats become 8 small ints: the
+    compressed index d24 searches without touching candidate floats.
+    Output is pure integers, so cross-engine hash-exactness needs only
+    that the argmin COMPARISONS agree — and they do, because each
+    sub-distance is the identical left-fold IEEE expression on both
+    engines. Steady state compiles to a scan of the stored index MV
+    (the oracle unrolls the training chain, so the gate re-proves the
+    stored codes equal a from-scratch build)."""
+    return _trained_assigned(spark, sf_dir).select(
         "vec_id", *[F.col(f"code_{s}").cast("long") for s in range(1, PQ_M + 1)]
     )
 
@@ -2922,118 +2896,27 @@ def d23_pq_codes(
     FROM ranked WHERE rank <= 3
     """,
 )
-def d24_ann_ivfpq(
-    spark: SparkSession, sf_dir: str, codebook: str = "trained"
-) -> DataFrame:
-    """IVF-PQ search (new r8): probes search only their IVF cell (d8's
-    stored assignment MV) and score candidates by ASYMMETRIC DISTANCE
-    — the sum over subspaces of the distance from the probe's
+def d24_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-PQ search (new r8): probes search only their IVF cell of
+    the stored trained index and score candidates by ASYMMETRIC
+    DISTANCE — the sum over subspaces of the distance from the probe's
     sub-vector to the candidate's ASSIGNED CENTROID sub-vector, read
-    from the stored PQ codes MV. No candidate float is ever touched:
-    the probe computes one distance table (|codebook| x PQ_M entries,
-    probes x centroids rows — broadcast-sized by construction) and
+    from its stored PQ codes. No candidate float is ever touched: the
+    probe computes one distance table (|codebook| x PQ_M entries) and
     every candidate scores via PQ_M table lookups. That inversion is
     the PQ scale story: scoring cost is O(codes) per candidate
     regardless of dimension, and the float corpus stays cold.
 
-    Plan shape: the distance table builds from the broadcast codebook
-    fan-out (probes x centroids), folds into one row per probe — a
-    {centroid -> [td_1..td_8]} map — and broadcasts; candidates join
-    their codes MV and score with PQ_M JVM-side hash lookups in a
-    single equi-join on probe id. The adc column sums the 8 lookups
-    LEFT-ASSOCIATIVELY, the same IEEE order as the oracle's
-    dt1.td_1 + ... + dt8.td_8, and each table entry is the identical
-    sub-distance fold, so raw doubles hash-match. Top-3 per probe by
-    (adc asc, candidate_id).
-
-    Codebook: d49-trained by default since r10 (cells AND codes read
-    from the single stored index MV — no separate codes join); the
-    every-100th-vector stub behind the flag (see d8_ann_ivf)."""
-    if codebook == "stub":
-        assigned = _ivf_assigned(spark, sf_dir)
-        centroids = _ivf_centroids(spark, sf_dir)
-        probes = _ivf_probe_set(assigned).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            F.col("cell").alias("qcell"),
-        )
-        cand = assigned.select(
-            F.col("vec_id").alias("candidate_id"), "label", "cell"
-        ).join(
-            _pq_codes(spark, sf_dir).withColumnRenamed("vec_id", "candidate_id"),
-            "candidate_id",
-        )
-    else:
-        assigned = _trained_assigned(spark, sf_dir)
-        centroids = F.broadcast(_trained_centroids(spark, sf_dir))
-        probes = _ivf_probe_set(assigned).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qe"),
-            F.col("cell").alias("qcell"),
-        )
-        cand = assigned.select(
-            F.col("vec_id").alias("candidate_id"),
-            "label",
-            "cell",
-            *[F.col(f"code_{s}") for s in range(1, PQ_M + 1)],
-        )
-    dt = probes.join(centroids).select(
-        "query_id",
-        "cid",
-        *[
-            _sql2_spark(
-                F.slice(F.col("qe"), (s - 1) * PQ_SUBDIM + 1, PQ_SUBDIM),
-                F.slice(F.col("ce"), (s - 1) * PQ_SUBDIM + 1, PQ_SUBDIM),
-            ).alias(f"td_{s}")
-            for s in range(1, PQ_M + 1)
-        ],
-    )
-    joined = F.broadcast(probes.select("query_id", "qcell")).join(
-        cand,
-        (F.col("cell") == F.col("qcell"))
-        & (F.col("candidate_id") != F.col("query_id")),
-    )
-    # fold the distance table into ONE row per probe — a map
-    # {centroid -> [td_1..td_8]} — and broadcast that: every candidate
-    # then scores with PQ_M hash lookups in a single equi-join, which
-    # is literally the PQ execution model (ship the probe's lookup
-    # table, never the floats). Map content is insensitive to
-    # collect_list order (cids are unique per probe), and the adc sum
-    # below is the same left-associative td_1 + ... + td_8 the oracle
-    # computes, so raw doubles still hash-match.
-    dtm = dt.groupBy("query_id").agg(
-        F.map_from_entries(
-            F.collect_list(
-                F.struct(
-                    F.col("cid"),
-                    F.array(*[F.col(f"td_{s}") for s in range(1, PQ_M + 1)]),
-                )
-            )
-        ).alias("tdm")
-    ).withColumnRenamed("query_id", "tq")
-    joined = joined.join(
-        F.broadcast(dtm), F.col("tq") == F.col("query_id")
-    )
-    adc = None
-    for s in range(1, PQ_M + 1):
-        term = F.element_at(F.col("tdm"), F.col(f"code_{s}"))[s - 1]
-        adc = term if adc is None else adc + term
-    w = Window.partitionBy("query_id").orderBy(F.col("adc"), F.col("candidate_id"))
-    return (
-        joined.select(
-            "query_id", "candidate_id", "label", "cell", adc.alias("adc")
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 3)
-        .withColumn("rank", F.col("rank").cast("int"))
-    )
+    Plan shape: `_ivf_candidates` with the "adc" score (the broadcast
+    per-probe distance-table map, one equi-join on probe id), then
+    top-3 per probe by (adc asc, candidate_id)."""
+    return _ivf_top3(_ivf_candidates(spark, sf_dir, ("adc",)), F.col("adc"))
 
 
 # ---------------------------------------------------------------- d25
+@query("d25b_ann_recall_trained", oracle=_TRAINED_RECALL_ORACLE)
 @query("d25_ann_recall", oracle=_TRAINED_RECALL_ORACLE)
-def d25_ann_recall(
-    spark: SparkSession, sf_dir: str, codebook: str = "trained"
-) -> DataFrame:
+def d25_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN index-quality report: per-probe recall of d24's IVF-PQ
     top-3 against the EXACT in-cell cosine top-3 (d8's ground truth —
     same cell restriction, so the number isolates PQ quantization
@@ -3043,37 +2926,29 @@ def d25_ann_recall(
     integers (probe, k returned, hits in truth) — the oracle
     re-derives both rankings independently and must agree row-for-row,
     which it can only do if every ADC comparison and every cosine
-    comparison matches across engines.
+    comparison matches across engines. Registered under two names:
+    d25b_ann_recall_trained is the same builder and the same oracle.
 
-    ``codebook`` passes straight through to both parents, so
-    d25(codebook="stub") is the before-training recall and the
-    default is the after-training number — identical probe ids on
-    both paths (the bounded md5-rank set), so the lift is row-for-row
-    (recorded in BENCH_NOTES). The default shares its oracle string
-    with d25b, which computes the same measurement through a
-    single-pipeline plan — a plan-shape A/B the gate re-proves.
-
-    Plan: both sides reuse the stored index MV; the intersection is a
-    broadcast-able top-3 join (3 rows per probe each side); one
-    aggregate on probe id."""
-    pq_top = d24_ann_ivfpq(spark, sf_dir, codebook=codebook).select(
-        "query_id", "candidate_id"
-    )
-    exact_top = d8_ann_ivf(spark, sf_dir, codebook=codebook).select(
-        F.col("query_id").alias("true_qid"),
-        F.col("candidate_id").alias("true_id"),
+    Spark shape: both scores are columns of ONE `_ivf_candidates`
+    relation (one index scan, one probe x candidate join), and the two
+    rankings are two windows over ONE query_id exchange; the recall
+    join-back is a conditional count (rank_adc <= 3 rows counted,
+    hits = those also rank_cos <= 3). The exchange carries the full
+    in-cell scored relation, which is probe-bounded (IVF_PROBES x
+    in-cell candidates) at any corpus size."""
+    scored = _ivf_candidates(spark, sf_dir, ("adc", "cosine"))
+    wq = Window.partitionBy("query_id").orderBy(F.col("adc"), F.col("candidate_id"))
+    we = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("candidate_id")
     )
     return (
-        pq_top.join(
-            F.broadcast(exact_top),
-            (F.col("query_id") == F.col("true_qid"))
-            & (F.col("candidate_id") == F.col("true_id")),
-            "left",
-        )
+        scored.withColumn("rank_adc", F.row_number().over(wq))
+        .withColumn("rank_cos", F.row_number().over(we))
+        .where(F.col("rank_adc") <= 3)
         .groupBy("query_id")
         .agg(
-            F.count("*").alias("k_returned"),
-            F.count("true_id").alias("hits"),
+            F.count("*").cast("long").alias("k_returned"),
+            F.count_if(F.col("rank_cos") <= 3).cast("long").alias("hits"),
         )
     )
 
@@ -6121,12 +5996,10 @@ def d48_retention_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- d49
 # Distributed k-means codebook training — the codebook the IVF/PQ
-# search family reads by DEFAULT since r10 (the every-100th-vector
-# stub survives behind codebook="stub" for recall-comparability
-# runs). d49 is the training step as a deterministic distributed
-# Lloyd iteration:
-# seed with the stub codebook, assign every vector to its max-cosine
-# centroid, recompute centroids from the members, reassign. Two
+# search family reads. d49 is the training step as a deterministic
+# distributed Lloyd iteration: seed with the fixed-count md5-rank
+# seed, assign every vector to its max-cosine centroid, recompute
+# centroids from the members, reassign. Two
 # determinism tricks make an inherently-float algorithm hash-exact
 # across engines: (1) coordinates are floor(x*1e9) INTEGERS, so the
 # per-dimension member sums are exact bigint math in any partition
@@ -6274,17 +6147,11 @@ def d49_kmeans_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------------------------- d25b
-# Closing the PQ tuning loop (VERDICT r8 #6): d25 measures IVF-PQ
-# recall on the DELIBERATE stub codebook (every-100th-vector slices)
-# and reads 0.233 — the number that motivates training. d25b is the
-# identical measurement with every quantizer fed from d49's TRAINED
-# codebook instead: cells route by argmax cosine against the trained
-# mean centroids, PQ codes argmin per-subspace against the SAME
-# centroid slices, and recall is PQ-top-3 vs exact-in-cell-top-3 per
-# probe. d25 -> d25b is therefore exactly the before/after a pipeline
-# runs when deciding whether another Lloyd round pays for itself
-# (recall lift recorded in BENCH_NOTES).
+# ------------------------------------------------ trained IVF-PQ index
+# Every quantizer of the search family is fed from d49's TRAINED
+# codebook: cells route by argmax cosine against the trained mean
+# centroids, and PQ codes argmin per-subspace against the SAME
+# centroid slices.
 #
 # Mean centroids: the stored codebook keeps RAW SUM vectors (cosine
 # never needs the division), but squared-L2 sub-distances are scale-
@@ -6309,7 +6176,7 @@ def _trained_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _trained_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE trained IVF-PQ index (vec_id, label, v, vnorm, cell,
     code_1..code_M), through the MV seam — the single index relation
-    the whole trained-default family (d8/d14/d23/d24/d25/d25b) reads.
+    the whole search family (d8/d14/d23/d24/d25/d25b/d66) reads.
     ONE corpus fan-out (vecs x broadcast k-row trained codebook)
     computes the cell argmax AND all PQ_M sub-code argmins in a single
     map-side-combinable groupBy, so routing and code build share the
@@ -6344,121 +6211,6 @@ def _trained_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the store is content-addressed by dataset, so a build-logic
     # change must change the key or stale files would be reused.
     return cached_relation("ivf_trained_assigned_v2", sf_dir, _build)
-
-
-def _ivf_probe_set(assigned: DataFrame) -> DataFrame:
-    """The family's bounded probe set: deterministic md5-rank top-K
-    over the index relation (IVF_PROBES rows at any corpus size,
-    TakeOrderedAndProject in the plan)."""
-    return assigned.orderBy(
-        F.md5(F.col("vec_id").cast("string")), "vec_id"
-    ).limit(IVF_PROBES)
-
-
-@query("d25b_ann_recall_trained", oracle=_TRAINED_RECALL_ORACLE)
-def d25b_ann_recall_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The trained IVF-PQ recall audit as a SINGLE flat pipeline over
-    the stored index — since r10 (trained codebook as family default,
-    VERDICT r9 #4) this computes the same measurement as
-    d25_ann_recall's default path, through a deliberately different
-    plan shape: d25 composes its two parent queries (d24's ADC search,
-    d8's exact in-cell search), d25b reads the index MV once and
-    builds both rankings inline. The two share ONE oracle string
-    (_TRAINED_RECALL_ORACLE), so the driver gate pins plan-shape
-    equivalence every round; the before-training number comes from
-    d25_ann_recall(codebook="stub").
-
-    Spark shape: ONE corpus fan-out (vecs x broadcast k-row trained
-    codebook) builds the stored index (cell argmax + all PQ_M sub-code
-    argmins in one map-side-combinable groupBy); probes are the
-    family's bounded md5-rank set; the per-probe distance table folds
-    to a broadcast map (d24's layout). r15 (guide §2.4): the ADC and
-    exact rankings used to be two SEPARATE probe x candidate joins —
-    same join condition, different scored expression — so the index
-    MV was scanned and joined twice and each leg paid its own
-    query_id exchange; both scores are now columns of ONE joined
-    relation and the two rankings are two windows over ONE exchange,
-    with the recall join-back replaced by a conditional count
-    (rank_adc <= 3 rows counted, hits = those also rank_cos <= 3 —
-    identical pair sets, proven by full-row parity). The exchange now
-    carries the full in-cell scored relation instead of two
-    WindowGroupLimit-pruned legs, but that relation is probe-bounded
-    (IVF_PROBES x in-cell candidates) at any corpus size."""
-    cm = _trained_centroids(spark, sf_dir)
-    assigned = _trained_assigned(spark, sf_dir)
-    probes = _ivf_probe_set(assigned).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("cell").alias("qcell"),
-    )
-    dt = probes.join(F.broadcast(cm)).select(
-        "query_id",
-        "cid",
-        *[
-            _sql2_spark(
-                F.slice(F.col("qv"), (s - 1) * PQ_SUBDIM + 1, PQ_SUBDIM),
-                F.slice(F.col("ce"), (s - 1) * PQ_SUBDIM + 1, PQ_SUBDIM),
-            ).alias(f"td_{s}")
-            for s in range(1, PQ_M + 1)
-        ],
-    )
-    dtm = (
-        dt.groupBy("query_id")
-        .agg(
-            F.map_from_entries(
-                F.collect_list(
-                    F.struct(
-                        F.col("cid"),
-                        F.array(*[F.col(f"td_{s}") for s in range(1, PQ_M + 1)]),
-                    )
-                )
-            ).alias("tdm")
-        )
-        .withColumnRenamed("query_id", "tq")
-    )
-    cand = assigned.select(
-        F.col("vec_id").alias("candidate_id"),
-        "cell",
-        "v",
-        *[F.col(f"code_{s}") for s in range(1, PQ_M + 1)],
-    )
-    joined = (
-        F.broadcast(probes)
-        .join(
-            cand,
-            (F.col("cell") == F.col("qcell"))
-            & (F.col("candidate_id") != F.col("query_id")),
-        )
-        .join(F.broadcast(dtm), F.col("tq") == F.col("query_id"))
-    )
-    adc = None
-    for s in range(1, PQ_M + 1):
-        term = F.element_at(F.col("tdm"), F.col(f"code_{s}"))[s - 1]
-        adc = term if adc is None else adc + term
-    cosine = (
-        _dot_spark(F.col("qv"), F.col("v"))
-        / (
-            F.sqrt(_dot_spark(F.col("qv"), F.col("qv")))
-            * F.sqrt(_dot_spark(F.col("v"), F.col("v")))
-        )
-    )
-    scored = joined.select(
-        "query_id", "candidate_id", adc.alias("adc"), cosine.alias("cosine")
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.col("adc"), F.col("candidate_id"))
-    we = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("candidate_id")
-    )
-    return (
-        scored.withColumn("rank_adc", F.row_number().over(wq))
-        .withColumn("rank_cos", F.row_number().over(we))
-        .where(F.col("rank_adc") <= 3)
-        .groupBy("query_id")
-        .agg(
-            F.count("*").cast("long").alias("k_returned"),
-            F.count_if(F.col("rank_cos") <= 3).cast("long").alias("hits"),
-        )
-    )
 
 
 # ---------------------------------------------------------------- d50
@@ -8262,11 +8014,7 @@ def d66_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     maxnp = max(D66_NPROBES)
     cm = _trained_centroids(spark, sf_dir)
     assigned = _trained_assigned(spark, sf_dir)
-    probes = _ivf_probe_set(assigned).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("vnorm").alias("qnorm"),
-    )
+    probes = _ivf_probes(assigned)
     # bounded collects: IVF_PROBES probe rows + the k-row codebook at
     # ANY corpus size (the probe bound lives in the plan as a LIMIT;
     # the codebook is the fixed-k trained MV). The cell ranking runs
@@ -8286,7 +8034,7 @@ def d66_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         cmr = _cf.result()
     qids = qpd["query_id"].to_numpy().astype(np.int64)
     Q = (
-        np.stack(qpd["qv"].to_numpy()).astype(np.float64)
+        np.stack(qpd["qe"].to_numpy()).astype(np.float64)
         if len(qpd)
         else np.zeros((0, 0))
     )

@@ -29,6 +29,16 @@ from .registry import query
 DATE_FMT = "yyyy-MM-dd"
 
 
+def _round2(c: F.Column) -> F.Column:
+    """DuckDB's ROUND(double, 2): half away from zero on the binary
+    double c * 100, then / 100. Spark's F.round(c, 2) rounds HALF_UP
+    on the shortest decimal string of c instead, so 41/40 (stored as
+    1.02499999...) reads as "1.025" and becomes 1.03 where DuckDB gives
+    1.02. F.round(x, 0) agrees with DuckDB: the shortest string of a
+    double that is not exactly k + 0.5 is never "k.5"."""
+    return F.round(c * F.lit(100.0), 0) / F.lit(100.0)
+
+
 @query(
     "e1_trend_summary",
     oracle=f"""
@@ -375,7 +385,7 @@ def e3_storylines(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("date").alias("active_days"),
         F.sum("neg").alias("total_negative_items"),
     )
-    avg_dur = F.round(F.col("sum_dur").cast("double") / F.col("n_eps"), 2)
+    avg_dur = _round2(F.col("sum_dur").cast("double") / F.col("n_eps"))
     # durs/samples are (sector x tag)-sized — force broadcast so the
     # static plan is BHJ, not a stats-blind SortMergeJoin.
     return (
@@ -390,12 +400,11 @@ def e3_storylines(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("max_dur").cast("long").alias("max_duration_days"),
             "total_negative_items",
             "active_days",
-            F.round(
+            _round2(
                 F.col("affected_entities") * 6
                 + F.col("total_negative_items") * F.lit(0.35)
                 + avg_dur * 2
-                + F.col("active_days") * F.lit(0.4),
-                2,
+                + F.col("active_days") * F.lit(0.4)
             ).alias("score"),
             "sample_entities",
             F.concat(

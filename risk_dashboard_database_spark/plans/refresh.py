@@ -118,10 +118,10 @@ MV_STORE_DAG: list[tuple[str, tuple[str, ...], tuple[str, ...]]] = [
     ("d50_rank1",     ("d50_rank1",),                     ("dup_edges",)),
     ("d3_normed",     ("d3_normed",),                     ("layout_embeddings",)),
     ("d19_clusters",  ("d19_clusters_v2",),               ("d3_normed",)),
-    # d8_assigned stays warmed for its remaining registry consumers
-    # (d44/d47 cell-local ops + the codebook="stub" flag paths); the
-    # old d23_codes step dropped out with the trained default (r10) —
-    # stub-only now, built lazily by a flagged run.
+    # d8_assigned (the every-100th-vector index, _ivf_assigned) serves
+    # only the cell-local ops d44/d44b/d47 and the streaming
+    # semantic-decontamination gate; the IVF/PQ search family reads
+    # trained_assigned.
     ("d8_assigned",   ("d8_assigned_v2",),                ("layout_embeddings",)),
     ("d49_codebook",  ("d49_codebook_v3",),               ("layout_embeddings",)),
     ("trained_assigned", ("ivf_trained_assigned_v2",),       ("d49_codebook",)),

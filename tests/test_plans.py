@@ -45,11 +45,12 @@ BNLJ_OK = {
     # Scan -> MapInPandas -> tiny window/agg — no BNLJ remains.)
     "d42_embed_recall",  # deliberate quadratic exact-audit pair join
                          # (d4's class: sample-scale ground truth)
-    "d24_ann_ivfpq",    # probe x codebook distance-table fan-out
-                        # (broadcast-sized by PQ's fixed-codebook contract)
-    "d25_ann_recall",   # embeds d24's plan (same fan-out)
-    "d25b_ann_recall_trained",  # probe x trained-codebook distance-table
-                                # fan-out (d24's layout, k rows)
+    "d24_ann_ivfpq",    # probe x trained-codebook distance-table fan-out
+                        # of _ivf_candidates' ADC score (IVF_PROBES x k
+                        # rows, broadcast-sized by PQ's fixed codebook)
+    "d25_ann_recall",   # the same ADC distance-table fan-out: d25 scores
+                        # ADC and cosine over one _ivf_candidates join
+    "d25b_ann_recall_trained",  # d25's builder under its second name
     "d49_kmeans_codebook",  # one Lloyd reassignment pass = one broadcast
                             # codebook fan-out (d8's layout, k rows;
                             # training lives in the d49_codebook MV)

@@ -255,3 +255,36 @@ def test_d36_mining_kernel_matches_declarative(spark):
     b = key(decl.collect())
     assert a == b
     assert len(a) > 0
+
+
+def test_assign_arrow_rejects_null_vectors(spark, tmp_path, monkeypatch):
+    """A null embedding row must fail the IVF index build with a
+    descriptive error (before the kernel's flatten/reshape), not an
+    opaque reshape error or a silently wrong cell."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from risk_dashboard_database_spark.plans import dedup, relcache
+
+    data = tmp_path / "data"
+    data.mkdir()
+    rows = [[float(i + 1), 1.0, 0.5, -0.25] for i in range(5)]
+    rows[3] = None
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(range(5), pa.int64()),  # centroid: 0
+                "embedding": pa.array(rows, pa.list_(pa.float32())),
+                "label": pa.array([0] * 5, pa.int32()),
+            }
+        ),
+        data / "embeddings.parquet",
+    )
+    monkeypatch.setattr(relcache, "MV_ROOT", str(tmp_path / "mv"))
+    relcache.clear()
+    try:
+        with pytest.raises(Exception, match="null vector or coordinate"):
+            dedup._ivf_assigned(spark, str(data)).collect()
+    finally:
+        relcache.clear()

@@ -133,84 +133,81 @@ def test_epoch_shuffle_rank_window_is_bucketed_not_global(spark):
     assert all(re.match(r"bkt#\d+,", s) for s in specs), specs
 
 
-def test_pq_codes_are_true_subspace_argmins(spark):
-    """d23 (stub flag — the hand-checkable every-100th-vector
-    codebook): every code is a codebook id and IS the argmin of the
-    squared-L2 sub-distance (hand-recomputed in Python for every
-    vector at sf0.001, ties broken by min cid). The trained default's
-    argmin machinery is the same min_by expression, pinned by the
-    shared-oracle driver gate."""
+def _trained_index_inputs(spark):
+    """(ppb vectors recomputed from the raw embeddings, trained mean
+    centroids, stored index rows) for hand-recomputation at sf0.001."""
+    import math
+
     from risk_dashboard_database_spark.plans.dedup import (
-        PQ_M,
-        PQ_SUBDIM,
-        d23_pq_codes,
+        D49_PPB,
+        _trained_assigned,
+        _trained_centroids,
     )
 
-    emb = {
-        r["vec_id"]: r["embedding"]
+    vecs = {
+        r["vec_id"]: [math.floor(float(x) * float(D49_PPB)) for x in r["embedding"]]
         for r in spark.read.parquet(f"{SF_DIR}/embeddings.parquet").collect()
     }
-    cb = {vid: e for vid, e in emb.items() if vid % 100 == 0}
-    rows = d23_pq_codes(spark, SF_DIR, codebook="stub").collect()
-    assert len(rows) == len(emb)
+    cb = {r["cid"]: r["ce"] for r in _trained_centroids(spark, SF_DIR).collect()}
+    index = {r["vec_id"]: r for r in _trained_assigned(spark, SF_DIR).collect()}
+    return vecs, cb, index
+
+
+def _sub_dist(a, b, s):
+    """Squared-L2 distance of subspace s, folded left from 0.0 in
+    dimension order — the same IEEE sequence as _sql2_spark."""
+    from risk_dashboard_database_spark.plans.dedup import PQ_SUBDIM
+
+    acc = 0.0
+    for i in range((s - 1) * PQ_SUBDIM, s * PQ_SUBDIM):
+        d = float(a[i]) - float(b[i])
+        acc += d * d
+    return acc
+
+
+def test_pq_codes_are_true_subspace_argmins(spark):
+    """d23: every code is a trained-codebook id and IS the argmin of
+    the squared-L2 sub-distance to the trained mean centroids
+    (hand-recomputed in Python for every vector at sf0.001, ties
+    broken by min cid)."""
+    from risk_dashboard_database_spark.plans.dedup import PQ_M, d23_pq_codes
+
+    vecs, cb, _ = _trained_index_inputs(spark)
+    rows = d23_pq_codes(spark, SF_DIR).collect()
+    assert len(rows) == len(vecs)
     for r in rows:
-        e = emb[r["vec_id"]]
+        v = vecs[r["vec_id"]]
         for s in range(1, PQ_M + 1):
-            lo = (s - 1) * PQ_SUBDIM
-            want = min(
-                (
-                    sum(
-                        (float(e[i]) - float(ce[i])) ** 2
-                        for i in range(lo, lo + PQ_SUBDIM)
-                    ),
-                    cid,
-                )
-                for cid, ce in cb.items()
-            )[1]
+            want = min((_sub_dist(v, ce, s), cid) for cid, ce in cb.items())[1]
             assert r[f"code_{s}"] == want, (r["vec_id"], s)
 
 
 def test_ivfpq_adc_is_sum_of_code_subdistances(spark):
-    """d24 (stub flag — hand-checkable codebook): every hit stays in
-    the probe's IVF cell and its adc equals the hand-computed sum of
-    probe-to-assigned-centroid sub-distances (the asymmetric-distance
-    definition), summed in subspace order. The trained default runs
-    the identical ADC pipeline over the trained index MV, pinned by
-    its own oracle."""
+    """d24: every hit stays in the probe's trained IVF cell and its adc
+    equals the hand-computed sum of probe-to-assigned-centroid
+    sub-distances (the asymmetric-distance definition), summed in
+    subspace order — the same IEEE order as the Spark plan, so the
+    doubles are equal, not merely close."""
     from risk_dashboard_database_spark.plans.dedup import (
         PQ_M,
-        PQ_SUBDIM,
-        _ivf_assigned,
         d23_pq_codes,
         d24_ann_ivfpq,
     )
 
-    emb = {
-        r["vec_id"]: r["embedding"]
-        for r in spark.read.parquet(f"{SF_DIR}/embeddings.parquet").collect()
-    }
-    cb = {vid: e for vid, e in emb.items() if vid % 100 == 0}
-    cells = {
-        r["vec_id"]: r["cell"] for r in _ivf_assigned(spark, SF_DIR).collect()
-    }
+    vecs, cb, index = _trained_index_inputs(spark)
     codes = {
         r["vec_id"]: [r[f"code_{s}"] for s in range(1, PQ_M + 1)]
-        for r in d23_pq_codes(spark, SF_DIR, codebook="stub").collect()
+        for r in d23_pq_codes(spark, SF_DIR).collect()
     }
-    rows = d24_ann_ivfpq(spark, SF_DIR, codebook="stub").collect()
+    rows = d24_ann_ivfpq(spark, SF_DIR).collect()
     assert rows
     for r in rows:
-        assert r["cell"] == cells[r["query_id"]] == cells[r["candidate_id"]]
-        q = emb[r["query_id"]]
+        qid, cid = r["query_id"], r["candidate_id"]
+        assert r["cell"] == index[qid]["cell"] == index[cid]["cell"]
         adc = 0.0
         for s in range(1, PQ_M + 1):
-            ce = cb[codes[r["candidate_id"]][s - 1]]
-            lo = (s - 1) * PQ_SUBDIM
-            adc += sum(
-                (float(q[i]) - float(ce[i])) ** 2
-                for i in range(lo, lo + PQ_SUBDIM)
-            )
-        assert abs(adc - r["adc"]) < 1e-9, (r["query_id"], r["candidate_id"])
+            adc += _sub_dist(vecs[qid], cb[codes[cid][s - 1]], s)
+        assert adc == r["adc"], (qid, cid)
 
 
 def test_ann_recall_counts_true_intersections(spark):
@@ -850,35 +847,25 @@ def test_d52_hist_ties_to_d9_and_d10(spark):
     assert total_redundant == sum(1 for r in rows if not r["is_canonical"])
 
 
-def test_d25_trained_default_equals_d25b_and_stub_shares_probes(spark):
-    """Since r10 the trained codebook is the family default, so
-    d25_ann_recall() and d25b_ann_recall_trained — two independently
-    shaped plans sharing one oracle string — must agree row-for-row;
-    and d25(codebook="stub") must select the IDENTICAL bounded probe
-    ids so the before/after-training recall lift is a one-line diff
-    (VERDICT r9 #4 / ADVICE r9)."""
-    from risk_dashboard_database_spark.plans.dedup import (
-        IVF_PROBES,
-        d25_ann_recall,
-        d25b_ann_recall_trained,
-    )
+def test_d25_trained_default_equals_d25b(spark):
+    """d25_ann_recall and d25b_ann_recall_trained are one builder
+    registered under two names with one oracle string; both names must
+    answer the same rows, one per bounded probe."""
+    from risk_dashboard_database_spark.plans import ORACLES, QUERIES
+    from risk_dashboard_database_spark.plans.dedup import IVF_PROBES
 
+    assert ORACLES["d25_ann_recall"] == ORACLES["d25b_ann_recall_trained"]
     base = {
         r["query_id"]: (r["k_returned"], r["hits"])
-        for r in d25_ann_recall(spark, SF_DIR).collect()
+        for r in QUERIES["d25_ann_recall"](spark, SF_DIR).collect()
     }
-    pipelined = {
+    twin = {
         r["query_id"]: (r["k_returned"], r["hits"])
-        for r in d25b_ann_recall_trained(spark, SF_DIR).collect()
+        for r in QUERIES["d25b_ann_recall_trained"](spark, SF_DIR).collect()
     }
-    assert base == pipelined, "composed vs single-pipeline plans diverged"
+    assert base == twin
     assert len(base) == IVF_PROBES
-    stub = {
-        r["query_id"]: (r["k_returned"], r["hits"])
-        for r in d25_ann_recall(spark, SF_DIR, codebook="stub").collect()
-    }
-    assert set(stub) == set(base), "stub probe ids must match trained"
-    for k, hits in list(base.values()) + list(stub.values()):
+    for k, hits in base.values():
         assert 1 <= k <= 3 and 0 <= hits <= k
 
 
@@ -905,28 +892,36 @@ def test_trained_assigned_is_a_corpus_partition(spark):
             assert r[f"code_{s}"] in cb_ids
 
 
-def test_stub_codebook_flag_paths_still_work(spark):
-    """The codebook="stub" recall-comparability flag (r10) must keep
-    working for every family member — d14's stub branch has no other
-    caller, and a rotted flag would silently break the before/after
-    recall story. Checks structural laws only (values are the
-    trained-default oracle's job)."""
+def test_ivf_search_top3_structural_laws(spark):
+    """d8 (nprobe=1) and d14 (nprobe=2) over the trained index: at
+    most IVF_PROBES probes, dense ranks from 1, no probe returned as
+    its own neighbor, and every hit inside a cell the probe searched.
+    Checks structural laws only (values are the oracle's job)."""
     from risk_dashboard_database_spark.plans.dedup import (
         IVF_PROBES,
+        _trained_assigned,
         d8_ann_ivf,
         d14_ann_ivf_nprobe2,
     )
 
+    cells = {
+        r["vec_id"]: r["cell"]
+        for r in _trained_assigned(spark, SF_DIR).select("vec_id", "cell").collect()
+    }
     for fn, nprobe_cells in ((d8_ann_ivf, 1), (d14_ann_ivf_nprobe2, 2)):
-        rows = fn(spark, SF_DIR, codebook="stub").collect()
+        rows = fn(spark, SF_DIR).collect()
         assert rows, fn.__name__
         by_probe: dict[int, list] = {}
         for r in rows:
             by_probe.setdefault(r["query_id"], []).append(r)
         assert len(by_probe) <= IVF_PROBES
         for qid, rs in by_probe.items():
-            # top-3 per probed cell, ranks dense from 1
-            assert len(rs) <= 3 * nprobe_cells
+            # top-3 per probe, ranks dense from 1
+            assert len(rs) <= 3
             ranks = sorted(r["rank"] for r in rs)
             assert ranks == list(range(1, len(rs) + 1))
             assert all(r["candidate_id"] != qid for r in rs)
+            assert all(r["cell"] == cells[r["candidate_id"]] for r in rs)
+            assert len({r["cell"] for r in rs}) <= nprobe_cells
+            if nprobe_cells == 1:
+                assert all(r["cell"] == cells[qid] for r in rs)

@@ -98,3 +98,16 @@ def test_relayout_clusters_by_time(spark, fat_dataset):
 def test_small_and_splittable_tables_untouched(spark, fat_dataset):
     df = tables.load_table(spark, fat_dataset, "orders")  # 1k rows
     assert [f for f in df.inputFiles()] == [f"file://{fat_dataset}/orders.parquet"]
+
+
+def test_table_memos_keep_one_entry_per_path(spark, tmp_path):
+    """load_table's file-probe memo and per-session reader memo are
+    revalidated by stat signature: rewriting a table replaces its
+    entries, so a dataset regenerated in place leaves one entry per
+    path (not one per rewrite) and the fresh contents are served."""
+    path = str(tmp_path / "orders.parquet")
+    for i in range(3):
+        pq.write_table(pa.table({"o_orderkey": pa.array(range(10 + i), pa.int64())}), path)
+        assert tables.load_table(spark, str(tmp_path), "orders").count() == 10 + i
+    assert len([k for k in tables._META_MEMO if path in str(k)]) == 1
+    assert len([k for k in spark._graft_table_memo if path in str(k)]) == 1
