@@ -249,7 +249,7 @@ def _assign_arrow(
     IEEE operation sequence of `_dot_spark`'s left fold; cosine then
     divides by (norm_v * norm_c) in that order; PQ sub-distances fold
     `(v[i]-c[i])*(v[i]-c[i])` per dimension exactly like
-    `_sql2_spark`. Tie-breaks: centroids are sorted by cid ascending
+    `_SQL2_SPARK_SQL`. Tie-breaks: centroids are sorted by cid ascending
     and numpy arg{max,min} return the FIRST extremum, reproducing
     max_by(cid, struct(cos, -cid)) / min_by(cid, struct(dist, cid)).
     Parity with the declarative forms is pinned by
@@ -639,14 +639,22 @@ def d6_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------------------- cosine
-def _dot_spark(a: F.Column, b: F.Column) -> F.Column:
-    """Left-fold dot product over double casts — matches the oracle's
-    list_reduce expression tree bit-for-bit."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+# The Spark SQL text of the folds: one `F.expr` per fold instead of a
+# node-by-node Column build (each node a py4j round trip). `0D`, not
+# `0.0`, which Spark SQL reads as a decimal.
+_DOT_SPARK_SQL = (
+    "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
+    " 0D, (acc, v) -> acc + v)"
+)
+
+
+def _dot_spark(a: str, b: str) -> F.Column:
+    """Left-fold dot product over double casts of the arrays named by
+    the SQL text `a` and `b` — matches the oracle's list_reduce
+    expression tree bit-for-bit. `_DOT_SPARK_SQL` must stay the same
+    expression tree as `_DOT_SQL`: the same products, summed left to
+    right from 0."""
+    return F.expr(_DOT_SPARK_SQL.format(a=a, b=b))
 
 
 _DOT_SQL = """
@@ -662,19 +670,15 @@ PQ_M = 8        # subspaces
 PQ_SUBDIM = 8   # dims per subspace (embeddings are 64-dim)
 
 
-def _sql2_spark(a: F.Column, b: F.Column) -> F.Column:
-    """Left-fold squared-L2 over double casts — the same expression
-    tree as `_SQL2_SQL` so sub-distances hash-match the oracle."""
-    return F.aggregate(
-        F.zip_with(
-            a,
-            b,
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+# Left-fold squared-L2 over double casts of the arrays `a` and `b`, as
+# Spark SQL text (every caller embeds it in a larger SQL expression).
+# It must stay the same expression tree as `_SQL2_SQL` so sub-distances
+# hash-match the oracle.
+_SQL2_SPARK_SQL = (
+    "aggregate(zip_with({a}, {b}, (x, y) ->"
+    " (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))),"
+    " 0D, (acc, v) -> acc + v)"
+)
 
 
 _SQL2_SQL = """
@@ -908,7 +912,7 @@ def _normed_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "label",
             "embedding",
-            F.sqrt(_dot_spark(F.col("embedding"), F.col("embedding"))).alias("norm"),
+            F.sqrt(_dot_spark("embedding", "embedding")).alias("norm"),
         )
 
     return cached_relation("d3_normed", sf_dir, _build)
@@ -1113,7 +1117,7 @@ def _d3_fold_reference(spark: SparkSession, sf_dir: str) -> DataFrame:
         "candidate_id",
         "label",
         (
-            _dot_spark(F.col("qe"), F.col("ce"))
+            _dot_spark("qe", "ce")
             / (F.col("qnorm") * F.col("cnorm"))
         ).alias("cosine"),
     )
@@ -1261,11 +1265,8 @@ def _ivf_probes(assigned: DataFrame) -> DataFrame:
     """The probe select of the trained index (query_id, qe, qcell,
     qnorm). Every IVF search, audit and d66's sweep kernel reads this
     one select, so all of them score the same probe ids."""
-    return _ivf_probe_set(assigned).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qe"),
-        F.col("cell").alias("qcell"),
-        F.col("vnorm").alias("qnorm"),
+    return _ivf_probe_set(assigned).selectExpr(
+        "vec_id AS query_id", "v AS qe", "cell AS qcell", "vnorm AS qnorm"
     )
 
 
@@ -1304,69 +1305,60 @@ def _ivf_candidates(
     probes = routed = _ivf_probes(assigned)
     route = "qcell"
     if nprobe > 1:
-        cos_to_centroid = _dot_spark(F.col("qe"), F.col("ce")) / (
-            F.sqrt(_dot_spark(F.col("qe"), F.col("qe")))
-            * F.sqrt(_dot_spark(F.col("ce"), F.col("ce")))
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            cos_to_centroid.desc(), F.col("cid")
+        cos_to_centroid = (
+            f"{_DOT_SPARK_SQL.format(a='qe', b='ce')}"
+            f" / (sqrt({_DOT_SPARK_SQL.format(a='qe', b='qe')})"
+            f" * sqrt({_DOT_SPARK_SQL.format(a='ce', b='ce')}))"
         )
         routed = (
             probes.join(F.broadcast(_trained_centroids(spark, sf_dir)))
-            .withColumn("prk", F.row_number().over(w))
-            .where(F.col("prk") <= nprobe)
-            .select("query_id", "qe", "qnorm", F.col("cid").alias("pcell"))
+            .selectExpr(
+                "*",
+                "row_number() OVER (PARTITION BY query_id"
+                f" ORDER BY {cos_to_centroid} DESC, cid) AS prk",
+            )
+            .where(f"prk <= {nprobe}")
+            .selectExpr("query_id", "qe", "qnorm", "cid AS pcell")
         )
         route = "pcell"
-    cand = assigned.select(
-        F.col("vec_id").alias("candidate_id"),
+    cand = assigned.selectExpr(
+        "vec_id AS candidate_id",
         "label",
-        F.col("v").alias("ce2"),
+        "v AS ce2",
         "cell",
-        F.col("vnorm").alias("cnorm"),
-        *[F.col(f"code_{s}") for s in range(1, PQ_M + 1)],
+        "vnorm AS cnorm",
+        *[f"code_{s}" for s in range(1, PQ_M + 1)],
     )
     joined = F.broadcast(routed).join(
-        cand,
-        (F.col("cell") == F.col(route))
-        & (F.col("candidate_id") != F.col("query_id")),
+        cand, F.expr(f"cell = {route} AND candidate_id <> query_id")
     )
     cols = {}
     if "cosine" in scores:
-        cols["cosine"] = _dot_spark(F.col("qe"), F.col("ce2")) / (
-            F.col("qnorm") * F.col("cnorm")
-        )
+        cols["cosine"] = f"{_DOT_SPARK_SQL.format(a='qe', b='ce2')} / (qnorm * cnorm)"
     if "adc" in scores:
-        dt = probes.join(F.broadcast(_trained_centroids(spark, sf_dir))).select(
+        dt = probes.join(F.broadcast(_trained_centroids(spark, sf_dir))).selectExpr(
             "query_id",
             "cid",
             *[
-                _sql2_spark(
-                    F.slice(F.col("qe"), (s - 1) * PQ_SUBDIM + 1, PQ_SUBDIM),
-                    F.slice(F.col("ce"), (s - 1) * PQ_SUBDIM + 1, PQ_SUBDIM),
-                ).alias(f"td_{s}")
+                _SQL2_SPARK_SQL.format(
+                    a=f"slice(qe, {(s - 1) * PQ_SUBDIM + 1}, {PQ_SUBDIM})",
+                    b=f"slice(ce, {(s - 1) * PQ_SUBDIM + 1}, {PQ_SUBDIM})",
+                )
+                + f" AS td_{s}"
                 for s in range(1, PQ_M + 1)
             ],
         )
+        tds = ", ".join(f"td_{s}" for s in range(1, PQ_M + 1))
         dtm = dt.groupBy("query_id").agg(
-            F.map_from_entries(
-                F.collect_list(
-                    F.struct(
-                        F.col("cid"),
-                        F.array(*[F.col(f"td_{s}") for s in range(1, PQ_M + 1)]),
-                    )
-                )
-            ).alias("tdm")
+            F.expr(f"map_from_entries(collect_list(struct(cid, array({tds})))) AS tdm")
         ).withColumnRenamed("query_id", "tq")
-        joined = joined.join(F.broadcast(dtm), F.col("tq") == F.col("query_id"))
-        terms = [
-            F.element_at(F.col("tdm"), F.col(f"code_{s}"))[s - 1]
-            for s in range(1, PQ_M + 1)
-        ]
-        cols["adc"] = sum(terms[1:], terms[0])
-    return joined.select(
+        joined = joined.join(F.broadcast(dtm), F.expr("tq = query_id"))
+        cols["adc"] = " + ".join(
+            f"element_at(tdm, code_{s})[{s - 1}]" for s in range(1, PQ_M + 1)
+        )
+    return joined.selectExpr(
         "query_id", "candidate_id", "label", "cell",
-        *[cols[s].alias(s) for s in scores],
+        *[f"{cols[s]} AS {s}" for s in scores],
     )
 
 
@@ -1468,7 +1460,7 @@ def d7_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = a.join(
         c, (F.col("bucket") == F.col("bucket_b")) & (F.col("vec_a") < F.col("vec_b"))
     )
-    cosine = _dot_spark(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
+    cosine = _dot_spark("ea", "eb") / (F.col("na") * F.col("nb"))
     return (
         pairs.select("vec_a", "vec_b", "bucket", cosine.alias("cosine"))
         .where(F.col("cosine") >= 0.40)
@@ -1534,10 +1526,10 @@ def d5_ann_lsh_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         "bucket",
         (
-            _dot_spark(F.col("qe"), F.col("ce"))
+            _dot_spark("qe", "ce")
             / (
-                F.sqrt(_dot_spark(F.col("qe"), F.col("qe")))
-                * F.sqrt(_dot_spark(F.col("ce"), F.col("ce")))
+                F.sqrt(_dot_spark("qe", "qe"))
+                * F.sqrt(_dot_spark("ce", "ce"))
             )
         ).alias("cosine"),
     )
@@ -2834,7 +2826,7 @@ def d22_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-probe distance TABLE (|codebook| x PQ_M lookups computed once
 # per probe) instead of touching any candidate's floats — IVF-PQ is
 # the standard billion-scale ANN layout (Jegou et al., TPAMI 2011).
-# (PQ_M / PQ_SUBDIM / _sql2_spark / _sub_sql live in the shared
+# (PQ_M / PQ_SUBDIM / _SQL2_SPARK_SQL / _sub_sql live in the shared
 # vector-fragments block near the top of the module.)
 
 
@@ -4907,7 +4899,7 @@ def d42_embed_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("norm").alias("nb"),
         F.col("bucket").alias("bkb"),
     )
-    cosine = _dot_spark(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
+    cosine = _dot_spark("ea", "eb") / (F.col("na") * F.col("nb"))
     pairs = (
         a_side.join(b_side, F.col("vec_a") < F.col("vec_b"))
         .select(
@@ -5401,7 +5393,7 @@ def d44_semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("norm").alias("nb"),
         "cell",
     )
-    cos = _dot_spark(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
+    cos = _dot_spark("ea", "eb") / (F.col("na") * F.col("nb"))
     pruned = (
         a.join(b, "cell")
         .where((F.col("vb") < F.col("va")) & (cos >= SEM_TAU))
@@ -5544,7 +5536,7 @@ def d44b_semantic_prune_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("blk") >= 0)
         .drop("__b0")
     )
-    cos = _dot_spark(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
+    cos = _dot_spark("ea", "eb") / (F.col("na") * F.col("nb"))
     pruned = (
         a_side.join(b_side, ["cell", "blk"])
         .where(
@@ -5858,7 +5850,7 @@ def d47_semantic_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
         "eval_id",
         "cell",
         (
-            _dot_spark(F.col("te"), F.col("ee"))
+            _dot_spark("te", "ee")
             / (F.col("tnorm") * F.col("enorm"))
         ).alias("cosine"),
     )
@@ -6161,15 +6153,11 @@ def d49_kmeans_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _trained_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trained MEAN centroids (cid, ce) from the stored sum-codebook —
-    the _D25B_CM_SQL expression as Spark columns (double division then
+    the _D25B_CM_SQL expression as Spark SQL (double division then
     floor: IEEE-identical on both engines for |sum| < 2^53)."""
-    return _d49_codebook(spark, sf_dir).select(
+    return _d49_codebook(spark, sf_dir).selectExpr(
         "cid",
-        F.transform(
-            "c",
-            lambda x: F.floor(x.cast("double") / F.col("n").cast("double"))
-            .cast("long"),
-        ).alias("ce"),
+        "transform(c, x -> CAST(floor(CAST(x AS DOUBLE) / CAST(n AS DOUBLE)) AS BIGINT)) AS ce",
     )
 
 
@@ -7453,9 +7441,9 @@ def d61_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # centroid norms fold ONCE on the k-row broadcast side (bit-equal
     # to the oracle's inline sqrt per the d8 stored-norm equivalence)
     cm = _trained_centroids(spark, sf_dir).withColumn(
-        "cnorm", F.sqrt(_dot_spark(F.col("ce"), F.col("ce")))
+        "cnorm", F.sqrt(_dot_spark("ce", "ce"))
     )
-    cos = _dot_spark(F.col("v"), F.col("ce")) / (
+    cos = _dot_spark("v", "ce") / (
         F.col("vnorm") * F.col("cnorm")
     )
     scored = assigned.join(
@@ -7536,9 +7524,9 @@ def d62_quantization_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     any corpus size."""
     assigned = _trained_assigned(spark, sf_dir)
     cm = _trained_centroids(spark, sf_dir).withColumn(
-        "cnorm", F.sqrt(_dot_spark(F.col("ce"), F.col("ce")))
+        "cnorm", F.sqrt(_dot_spark("ce", "ce"))
     )
-    cos = _dot_spark(F.col("v"), F.col("ce")) / (
+    cos = _dot_spark("v", "ce") / (
         F.col("vnorm") * F.col("cnorm")
     )
     err = F.floor(

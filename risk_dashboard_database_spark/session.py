@@ -10,6 +10,15 @@ partitions and splits skewed ones at runtime, so the plan survives a
 1000x scale-up without hand-retuning `spark.sql.shuffle.partitions`
 per query. Local test runs use local[N]; a cluster deployment only
 swaps the master URL and executor sizing.
+
+DataFrame debugging (`spark.python.sql.dataFrameDebugging.enabled`) is
+off. With it on, PySpark wraps every Column method and `F.*` call to
+record its Python call site in the JVM: about five py4j round trips and
+a Python stack walk per call, which was most of plan construction's
+cost on the vector-search queries. What is given up is the Python
+call-site fragment in Spark's DataFrame query context. Classic mode
+analyzes each DataFrame as it is built, so an analysis error still
+raises on the builder line that caused it.
 """
 
 from __future__ import annotations
@@ -89,6 +98,9 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_heap()),
         )
         .config("spark.ui.enabled", "false")
+        # No per-call call-site capture (module docstring). PySpark
+        # reads this once per process, from the first active session.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

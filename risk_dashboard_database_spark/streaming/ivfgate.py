@@ -33,33 +33,27 @@ from pyspark.sql import functions as F
 from ..plans.dedup import (
     PQ_M,
     PQ_SUBDIM,
+    _DOT_SPARK_SQL,
+    _SQL2_SPARK_SQL,
     _dot_spark,
-    _sql2_spark,
     _trained_centroids,
     ppb_vector,
 )
 from .semdecontam import _argmax_fold
 
 
-def _argmin_fold(arr: Column, dist_of, id_of) -> Column:
+def _argmin_fold(arr: str, dist_of: str, id_of: str) -> Column:
     """aggregate() argmin with the batch min_by tie-break
-    (distance asc, id asc). Returns struct(bd double, bid long)."""
-    init = F.struct(
-        F.lit(float("inf")).alias("bd"),
-        F.lit(2**62).cast("long").alias("bid"),
+    (distance asc, id asc), in the SQL text form of `_argmax_fold`.
+    Returns struct(bd double, bid long)."""
+    return F.expr(
+        f"aggregate({arr}, named_struct('bd', CAST('Infinity' AS DOUBLE),"
+        f" 'bid', CAST({2**62} AS BIGINT)),"
+        f" (acc, x) -> CASE WHEN ({dist_of}) < acc.bd"
+        f" OR (({dist_of}) = acc.bd AND ({id_of}) < acc.bid)"
+        f" THEN named_struct('bd', {dist_of}, 'bid', CAST({id_of} AS BIGINT))"
+        " ELSE acc END)"
     )
-
-    def merge(acc, x):
-        d = dist_of(x)
-        i = id_of(x)
-        better = (d < acc.getField("bd")) | (
-            (d == acc.getField("bd")) & (i < acc.getField("bid"))
-        )
-        return F.when(
-            better, F.struct(d.alias("bd"), i.cast("long").alias("bid"))
-        ).otherwise(acc)
-
-    return F.aggregate(arr, init, merge)
 
 
 def codebook_side(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -68,9 +62,7 @@ def codebook_side(spark: SparkSession, sf_dir: str) -> DataFrame:
     Norms fold once here (k rows), never per arriving vector."""
     return (
         _trained_centroids(spark, sf_dir)
-        .withColumn(
-            "cnorm", F.sqrt(_dot_spark(F.col("ce"), F.col("ce")))
-        )
+        .withColumn("cnorm", F.sqrt(_dot_spark("ce", "ce")))
         .agg(
             F.sort_array(
                 F.collect_list(F.struct("cid", "ce", "cnorm"))
@@ -93,22 +85,21 @@ def with_trained_assignment(
         )
         .withColumn("one", F.lit(1))
         .join(static_side, "one")
-        .withColumn("vnorm", F.sqrt(_dot_spark(F.col("v"), F.col("v"))))
+        .withColumn("vnorm", F.sqrt(_dot_spark("v", "v")))
     )
     cell_pick = _argmax_fold(
-        F.col("cents"),
-        lambda x: _dot_spark(F.col("v"), x.getField("ce"))
-        / (F.col("vnorm") * x.getField("cnorm")),
-        lambda x: x.getField("cid"),
+        "cents",
+        f"{_DOT_SPARK_SQL.format(a='v', b='x.ce')} / (vnorm * x.cnorm)",
+        "x.cid",
     )
     codes = [
         _argmin_fold(
-            F.col("cents"),
-            lambda x, s=s: _sql2_spark(
-                F.slice(F.col("v"), (s - 1) * PQ_SUBDIM + 1, PQ_SUBDIM),
-                F.slice(x.getField("ce"), (s - 1) * PQ_SUBDIM + 1, PQ_SUBDIM),
+            "cents",
+            _SQL2_SPARK_SQL.format(
+                a=f"slice(v, {(s - 1) * PQ_SUBDIM + 1}, {PQ_SUBDIM})",
+                b=f"slice(x.ce, {(s - 1) * PQ_SUBDIM + 1}, {PQ_SUBDIM})",
             ),
-            lambda x: x.getField("cid"),
+            "x.cid",
         )
         .getField("bid")
         .alias(f"code_{s}")

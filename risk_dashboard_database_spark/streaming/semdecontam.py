@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from ..plans.dedup import (
     D47_COS_MIN,
     D47_EVAL_MOD,
+    _DOT_SPARK_SQL,
     _dot_spark,
     _ivf_assigned,
     _ivf_centroids,
@@ -58,25 +59,19 @@ def _static_side(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cents.crossJoin(evs).withColumn("one", F.lit(1))
 
 
-def _argmax_fold(arr: Column, cos_of, id_of) -> Column:
+def _argmax_fold(arr: str, cos_of: str, id_of: str) -> Column:
     """aggregate() argmax with the batch max_by tie-break
-    (cosine desc, id asc). Returns struct(bc double, bid long);
-    bc stays -2.0 when arr is empty (cosine >= -1 always beats it)."""
-    init = F.struct(
-        F.lit(-2.0).alias("bc"), F.lit(2**62).cast("long").alias("bid")
+    (cosine desc, id asc). `arr` is SQL text for the array; `cos_of`
+    and `id_of` are SQL text over its lambda element `x`. Returns
+    struct(bc double, bid long); bc stays -2.0 when arr is empty
+    (cosine >= -1 always beats it)."""
+    return F.expr(
+        f"aggregate({arr}, named_struct('bc', -2D, 'bid', CAST({2**62} AS BIGINT)),"
+        f" (acc, x) -> CASE WHEN ({cos_of}) > acc.bc"
+        f" OR (({cos_of}) = acc.bc AND ({id_of}) < acc.bid)"
+        f" THEN named_struct('bc', {cos_of}, 'bid', CAST({id_of} AS BIGINT))"
+        " ELSE acc END)"
     )
-
-    def merge(acc, x):
-        c = cos_of(x)
-        i = id_of(x)
-        better = (c > acc.getField("bc")) | (
-            (c == acc.getField("bc")) & (i < acc.getField("bid"))
-        )
-        return F.when(
-            better, F.struct(c.alias("bc"), i.cast("long").alias("bid"))
-        ).otherwise(acc)
-
-    return F.aggregate(arr, init, merge)
 
 
 def with_leak_flags(vecs: DataFrame, static_side: DataFrame) -> DataFrame:
@@ -88,26 +83,23 @@ def with_leak_flags(vecs: DataFrame, static_side: DataFrame) -> DataFrame:
         vecs.where(F.col("vec_id") % D47_EVAL_MOD != 0)
         .withColumn("one", F.lit(1))
         .join(static_side, "one")
-        .withColumn(
-            "tnorm", F.sqrt(_dot_spark(F.col("embedding"), F.col("embedding")))
-        )
+        .withColumn("tnorm", F.sqrt(_dot_spark("embedding", "embedding")))
     )
     # pass 1: the _ivf_assigned expression tree (full sqrt form — the
     # centroid norm varies per candidate)
     cell_pick = _argmax_fold(
-        F.col("cents"),
-        lambda x: _dot_spark(F.col("embedding"), x.getField("ce"))
-        / (F.col("tnorm") * F.sqrt(_dot_spark(x.getField("ce"), x.getField("ce")))),
-        lambda x: x.getField("cid"),
+        "cents",
+        f"{_DOT_SPARK_SQL.format(a='embedding', b='x.ce')}"
+        f" / (tnorm * sqrt({_DOT_SPARK_SQL.format(a='x.ce', b='x.ce')}))",
+        "x.cid",
     )
     df = df.withColumn("cell", cell_pick.getField("bid"))
     # pass 2: the d47 expression tree (stored-norm form) over this
     # cell's eval rows only
     best = _argmax_fold(
-        F.filter(F.col("evs"), lambda e: e.getField("ecell") == F.col("cell")),
-        lambda e: _dot_spark(F.col("embedding"), e.getField("ee"))
-        / (F.col("tnorm") * e.getField("enorm")),
-        lambda e: e.getField("eval_id"),
+        "filter(evs, e -> e.ecell = cell)",
+        f"{_DOT_SPARK_SQL.format(a='embedding', b='x.ee')} / (tnorm * x.enorm)",
+        "x.eval_id",
     )
     return (
         df.withColumn("best", best)

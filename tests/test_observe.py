@@ -114,9 +114,10 @@ def test_single_flight_forked_child_does_not_co_hold(tmp_path):
         "    assert ok\n"
         "    pid = os.fork()\n"
         "    if pid == 0:\n"
+        "        # the at-fork handler has run by the time fork() returns\n"
+        "        print('ready', os.getpid(), flush=True)\n"
         "        time.sleep(60)  # orphan survives the parent\n"
         "        os._exit(0)\n"
-        "    print(pid, flush=True)\n"
         "    time.sleep(60)  # parent idles holding the lock\n"
     )
     parent = subprocess.Popen(
@@ -124,7 +125,11 @@ def test_single_flight_forked_child_does_not_co_hold(tmp_path):
         stdout=subprocess.PIPE,
         text=True,
     )
-    orphan_pid = int(parent.stdout.readline().strip())
+    # The child's own line: read before the kill, so the parent never
+    # dies while the child has yet to close its inherited lock fd.
+    ready, orphan_pid = parent.stdout.readline().split()
+    assert ready == "ready"
+    orphan_pid = int(orphan_pid)
     try:
         with single_flight(str(tmp_path), "job") as got:
             assert got is False, "parent holds the lock"

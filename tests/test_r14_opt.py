@@ -5,9 +5,102 @@ hash-compares results, so 'close' is a regression)."""
 
 from __future__ import annotations
 
+import struct
+
 from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def _dot_ref(a, b):
+    """The Column-built left-fold dot product that `dedup._dot_spark`
+    replaced with one SQL-text expression, kept as the parity
+    reference: same IEEE operation order as the oracle's list_reduce."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def _sql2_ref(a, b):
+    """The Column-built squared-L2 left fold that the SQL text
+    `dedup._SQL2_SPARK_SQL` replaced, kept as the parity reference."""
+    return F.aggregate(
+        F.zip_with(
+            a,
+            b,
+            lambda x, y: (x.cast("double") - y.cast("double"))
+            * (x.cast("double") - y.cast("double")),
+        ),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def _bits(x):
+    return None if x is None else struct.pack(">d", x)
+
+
+def test_sql_text_folds_are_bit_identical_to_column_reference(spark):
+    """`_dot_spark`/`_SQL2_SPARK_SQL` are single SQL-text expressions; every
+    double they return must carry the same bits as the Column-built
+    fold they replaced: real embeddings (float arrays, adjacent vec_ids
+    paired), whole and per-subspace slices, plus hand-built rows with
+    negative coordinates, an all-zero vector and long arrays."""
+    from risk_dashboard_database_spark.plans.dedup import (
+        PQ_SUBDIM,
+        _SQL2_SPARK_SQL,
+        _dot_spark,
+    )
+    from risk_dashboard_database_spark.tables import load_table
+
+    def _sql2_spark(a, b):
+        return F.expr(_SQL2_SPARK_SQL.format(a=a, b=b))
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    pairs = emb.select("vec_id", F.col("embedding").alias("a")).join(
+        emb.select((F.col("vec_id") - 1).alias("vec_id"), F.col("embedding").alias("b")),
+        "vec_id",
+    ).select("a", "b")
+    hand = spark.createDataFrame(
+        [
+            ([-1.5, 2.25, -3.0e-7, 0.0, 1e300, -7.0, 0.1, -0.2],
+             [0.5, -0.125, 1e10, -2.0, 1e10, -7.0, 0.3, 0.7]),
+            ([0.0] * 8, [-1.0, 2.0, -3.0, 4.0, -5.0, 6.0, -7.0, 8.0]),
+            ([0.0] * 8, [0.0] * 8),
+            ([-0.0] * 8, [-2.5] * 8),
+        ],
+        "a array<double>, b array<double>",
+    )
+    longs = spark.createDataFrame(
+        [([-(10**12), 3, -5, 0], [7, -(10**9), 0, 11]), ([0, 0, 0, 0], [0, 0, 0, 0])],
+        "a array<bigint>, b array<bigint>",
+    )
+    o = PQ_SUBDIM + 1
+    checked = 0
+    for df in (pairs, hand, longs):
+        got = df.select(
+            _dot_spark("a", "b").alias("dot"),
+            _dot_ref(F.col("a"), F.col("b")).alias("ref_dot"),
+            _dot_spark("a", "a").alias("self"),
+            _dot_ref(F.col("a"), F.col("a")).alias("ref_self"),
+            _sql2_spark("a", "b").alias("sq"),
+            _sql2_ref(F.col("a"), F.col("b")).alias("ref_sq"),
+            _sql2_spark(f"slice(a, {o}, {PQ_SUBDIM})", f"slice(b, {o}, {PQ_SUBDIM})")
+            .alias("sub"),
+            _sql2_ref(
+                F.slice(F.col("a"), o, PQ_SUBDIM), F.slice(F.col("b"), o, PQ_SUBDIM)
+            ).alias("ref_sub"),
+        ).collect()
+        assert got
+        for r in got:
+            assert _bits(r["dot"]) == _bits(r["ref_dot"])
+            assert _bits(r["self"]) == _bits(r["ref_self"])
+            assert _bits(r["sq"]) == _bits(r["ref_sq"])
+            assert _bits(r["sub"]) == _bits(r["ref_sub"])
+            checked += 1
+    assert checked > 6
 
 
 def test_d2_sigs_arrow_kernel_matches_declarative_fold(spark):
@@ -31,11 +124,9 @@ def test_d2_sigs_arrow_kernel_matches_declarative_fold(spark):
 def _decl_assign(vecs, codebook, vec_col, cvec_col):
     """The pre-r14 declarative assignment (broadcast n x k fan-out +
     max_by re-fold), kept here as the parity reference."""
-    from risk_dashboard_database_spark.plans.dedup import _dot_spark
-
-    cos = _dot_spark(F.col(vec_col), F.col(cvec_col)) / (
-        F.sqrt(_dot_spark(F.col(vec_col), F.col(vec_col)))
-        * F.sqrt(_dot_spark(F.col(cvec_col), F.col(cvec_col)))
+    cos = _dot_ref(F.col(vec_col), F.col(cvec_col)) / (
+        F.sqrt(_dot_ref(F.col(vec_col), F.col(vec_col)))
+        * F.sqrt(_dot_ref(F.col(cvec_col), F.col(cvec_col)))
     )
     return (
         vecs.join(F.broadcast(codebook))
@@ -76,12 +167,7 @@ def test_assign_arrow_kernel_matches_declarative_trained(spark, tmp_path, monkey
     every float: vnorm is the same left-fold + sqrt, sub-distances the
     same (x-y)^2 fold, ties the same (dist, cid) ordering."""
     from risk_dashboard_database_spark.plans import dedup, relcache
-    from risk_dashboard_database_spark.plans.dedup import (
-        PQ_M,
-        PQ_SUBDIM,
-        _dot_spark,
-        _sql2_spark,
-    )
+    from risk_dashboard_database_spark.plans.dedup import PQ_M, PQ_SUBDIM
 
     monkeypatch.setattr(relcache, "MV_ROOT", str(tmp_path / "mv"))
     relcache.clear()
@@ -89,12 +175,12 @@ def test_assign_arrow_kernel_matches_declarative_trained(spark, tmp_path, monkey
         kern = dedup._trained_assigned(spark, SF_DIR).collect()
         vecs = dedup._d49_vecs(spark, SF_DIR)
         cm = dedup._trained_centroids(spark, SF_DIR)
-        cos = _dot_spark(F.col("v"), F.col("ce")) / (
-            F.sqrt(_dot_spark(F.col("v"), F.col("v")))
-            * F.sqrt(_dot_spark(F.col("ce"), F.col("ce")))
+        cos = _dot_ref(F.col("v"), F.col("ce")) / (
+            F.sqrt(_dot_ref(F.col("v"), F.col("v")))
+            * F.sqrt(_dot_ref(F.col("ce"), F.col("ce")))
         )
         subdists = [
-            _sql2_spark(
+            _sql2_ref(
                 F.slice(F.col("v"), (s - 1) * PQ_SUBDIM + 1, PQ_SUBDIM),
                 F.slice(F.col("ce"), (s - 1) * PQ_SUBDIM + 1, PQ_SUBDIM),
             ).alias(f"d_{s}")
@@ -118,7 +204,7 @@ def test_assign_arrow_kernel_matches_declarative_trained(spark, tmp_path, monkey
                     for s in range(1, PQ_M + 1)
                 ],
             )
-            .withColumn("vnorm", F.sqrt(_dot_spark(F.col("v"), F.col("v"))))
+            .withColumn("vnorm", F.sqrt(_dot_ref(F.col("v"), F.col("v"))))
         ).collect()
         key = lambda rows: {
             r["vec_id"]: (
@@ -141,7 +227,6 @@ def test_ivf_assigned_kernel_matches_declarative_stub(spark, tmp_path, monkeypat
     """_ivf_assigned (stub codebook) through the kernel: cell + norm
     bit-identical to the old broadcast fan-out."""
     from risk_dashboard_database_spark.plans import dedup, relcache
-    from risk_dashboard_database_spark.plans.dedup import _dot_spark
     from risk_dashboard_database_spark.tables import load_table
 
     monkeypatch.setattr(relcache, "MV_ROOT", str(tmp_path / "mv"))
@@ -150,9 +235,9 @@ def test_ivf_assigned_kernel_matches_declarative_stub(spark, tmp_path, monkeypat
         kern = dedup._ivf_assigned(spark, SF_DIR).collect()
         emb = load_table(spark, SF_DIR, "embeddings")
         centroids = dedup._ivf_centroids(spark, SF_DIR)
-        cos = _dot_spark(F.col("embedding"), F.col("ce")) / (
-            F.sqrt(_dot_spark(F.col("embedding"), F.col("embedding")))
-            * F.sqrt(_dot_spark(F.col("ce"), F.col("ce")))
+        cos = _dot_ref(F.col("embedding"), F.col("ce")) / (
+            F.sqrt(_dot_ref(F.col("embedding"), F.col("embedding")))
+            * F.sqrt(_dot_ref(F.col("ce"), F.col("ce")))
         )
         decl = (
             emb.join(centroids)
@@ -167,7 +252,7 @@ def test_ivf_assigned_kernel_matches_declarative_stub(spark, tmp_path, monkeypat
                 ).alias("cell"),
             )
             .withColumn(
-                "norm", F.sqrt(_dot_spark(F.col("embedding"), F.col("embedding")))
+                "norm", F.sqrt(_dot_ref(F.col("embedding"), F.col("embedding")))
             )
         ).collect()
         key = lambda rows: {
@@ -191,7 +276,6 @@ def test_d36_mining_kernel_matches_declarative(spark):
     from risk_dashboard_database_spark.plans.dedup import (
         D3_PROBES,
         HARDNEG_TOPK,
-        _dot_spark,
         _normed_embeddings,
     )
 
@@ -217,7 +301,7 @@ def test_d36_mining_kernel_matches_declarative(spark):
         "query_label",
         "candidate_id",
         "cand_label",
-        (_dot_spark(F.col("qe"), F.col("ce")) / (F.col("qnorm") * F.col("cnorm"))).alias(
+        (_dot_ref(F.col("qe"), F.col("ce")) / (F.col("qnorm") * F.col("cnorm"))).alias(
             "cosine"
         ),
     )

@@ -155,7 +155,7 @@ def _trained_index_inputs(spark):
 
 def _sub_dist(a, b, s):
     """Squared-L2 distance of subspace s, folded left from 0.0 in
-    dimension order — the same IEEE sequence as _sql2_spark."""
+    dimension order — the same IEEE sequence as _SQL2_SPARK_SQL."""
     from risk_dashboard_database_spark.plans.dedup import PQ_SUBDIM
 
     acc = 0.0

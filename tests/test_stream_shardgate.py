@@ -5,6 +5,7 @@ must be contiguous on each (source, stream) packing axis."""
 
 from __future__ import annotations
 
+import os
 import shutil
 from collections import defaultdict
 
@@ -77,7 +78,13 @@ def test_stream_shard_pack_single_file_batches(spark, tmp_path):
     for i in range(3):
         lo = i * third
         hi = full.num_rows if i == 2 else (i + 1) * third
-        pq.write_table(full.slice(lo, hi - lo), docs_dir / f"part-{i}.parquet")
+        path = docs_dir / f"part-{i}.parquet"
+        pq.write_table(full.slice(lo, hi - lo), path)
+        # The file source orders files by modification time (ms), and
+        # ties fall back to directory-listing order; three quick writes
+        # often share a millisecond. One second apart, they arrive in
+        # doc_id order.
+        os.utime(path, (1_000_000_000 + i, 1_000_000_000 + i))
 
     spark_schema = spark.read.parquet(f"{SF_DIR}/documents.parquet").schema
     from pyspark.sql import functions as F

@@ -83,7 +83,7 @@ def main() -> None:
                 F.col("vec_id").alias("vb"), F.col("embedding").alias("eb"),
                 F.col("norm").alias("nb"), "cell",
             )
-            cos = _dot_spark(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
+            cos = _dot_spark("ea", "eb") / (F.col("na") * F.col("nb"))
             return (
                 a.join(b, "cell")
                 .where((F.col("vb") < F.col("va")) & (cos >= SEM_TAU))
@@ -112,7 +112,7 @@ def main() -> None:
                 .where(F.col("blk") >= 0)
                 .drop("__b0")
             )
-            cos = _dot_spark(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
+            cos = _dot_spark("ea", "eb") / (F.col("na") * F.col("nb"))
             return (
                 a_side.join(b_side, ["cell", "blk"])
                 .where(
