@@ -69,17 +69,6 @@ class SlowQueryLog:
             return action()
 
 
-def lock_holder(path: str) -> tuple[int, int] | None:
-    """(pid, acquired_at_epoch) written by the current holder, or None.
-    Observability ONLY — liveness is the kernel's flock, never this."""
-    try:
-        with open(path) as f:
-            pid_s, _, ts_s = f.read().strip().partition(":")
-            return int(pid_s), int(ts_s or "0")
-    except (OSError, ValueError):
-        return None
-
-
 # fds of lock files currently open in THIS process. flock lives on the
 # open file description, which fork() shares (O_CLOEXEC only covers
 # exec), so a forked child that never execs — multiprocessing's 'fork'

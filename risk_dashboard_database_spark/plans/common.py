@@ -12,9 +12,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..tables import load_table
+from ..tables import FACT_TABLES, load_table
+from .relcache import cached_relation, mv_step
+
+# One refresh step per fact table's re-layout (tables.py's scale-gated
+# seam, so the keys are wildcards: tiny datasets write none). Declared
+# here rather than in tables.py, which must stay importable without
+# the plans package.
+for _t in sorted(FACT_TABLES):
+    mv_step(f"layout_{_t}", keys=(f"layout_{_t}*",))(
+        lambda spark, sf_dir, t=_t: load_table(spark, sf_dir, t)
+    )
 
 
+@mv_step("user_day", keys=("user_day",), deps=("layout_events",))
 def user_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-(user, day) counts: total / errors / purchases + exact
     decimal value sum. Single hash-agg over the events scan.
@@ -23,8 +34,6 @@ def user_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`sql/article_daily_counts_mv.sql`) — a dozen window/anomaly/
     endpoint queries consume it, so the events aggregation runs once
     per dataset, exactly like the MV refresh, not once per query."""
-    from .relcache import cached_relation
-
     return cached_relation(
         "user_day", sf_dir, lambda: _build_user_day(spark, sf_dir)
     )

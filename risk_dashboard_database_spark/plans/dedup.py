@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from ..functions.urls import url_hash
 from ..tables import load_table
 from .registry import query
+from .relcache import cached_relation, mv_step
 from .synth import K_SQL, k_col, normalized_url_sql, url_col
 
 N_MINHASH = 12
@@ -383,8 +384,6 @@ def _shingle_toks(spark: SparkSession, sf_dir: str) -> DataFrame:
     INTERNALLY). No-op at scale, where the corpus arrives in >= cores
     splits. Content is row-order-independent downstream (every
     consumer aggregates/joins by doc_id)."""
-    from .relcache import cached_relation
-
     docs = load_table(spark, sf_dir, "documents")
 
     def _build() -> DataFrame:
@@ -397,6 +396,24 @@ def _shingle_toks(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return cached_relation("d2_toks", sf_dir, _build)
+
+
+@mv_step("d2_sigs", keys=("d2_toks", "d2_sigs"), deps=("layout_documents",))
+def _d2_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The stored per-doc MinHash signatures that d2, d27 and d37 band.
+    Stored rather than inlined: the shingle/minhash expressions are
+    referenced by the band explode AND both sides of the candidate
+    join, and without a materialization barrier Catalyst's
+    CollapseProject inlines the (expensive) md5 transforms into every
+    reference — measured 30x recompute at sf0.1. Built via the Arrow
+    kernel (r14): same rows bit-for-bit as the declarative
+    `withColumn("mh", _minhash_spark(sh))` (pinned by
+    tests/test_r14_opt.py), ~10x cheaper and parallel instead of a
+    single-task interpreted md5 storm."""
+    toks = _shingle_toks(spark, sf_dir)
+    return cached_relation(
+        "d2_sigs", sf_dir, lambda: _minhash_arrow_sigs(spark, toks)
+    )
 
 
 _JACCARD_SQL = """
@@ -446,26 +463,8 @@ def d2_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash; no all-pairs comparison ever happens — at 100 TB the bucket
     join is the only quadratic-risk spot and buckets stay tiny under
     any real near-dup density."""
-    docs = load_table(spark, sf_dir, "documents")
-    # cached_relation(): the shingle/minhash expressions are referenced
-    # by the band explode AND both sides of the candidate join; without
-    # a materialization barrier Catalyst's CollapseProject inlines the
-    # (expensive) md5 transforms into every reference — measured 30x
-    # recompute at sf0.1. This is the signature table the reference
-    # (and any 100 TB deployment) materializes explicitly; the cache
-    # evicts on dataset switch so blocks never accumulate.
-    from .relcache import cached_relation
-
     toks = _shingle_toks(spark, sf_dir)
-    # build via the Arrow kernel (r14): same rows bit-for-bit as the
-    # declarative `withColumn("mh", _minhash_spark(sh))` (pinned by
-    # tests/test_r14_opt.py), ~10x cheaper and parallel instead of a
-    # single-task interpreted md5 storm.
-    sigs = cached_relation(
-        "d2_sigs",
-        sf_dir,
-        lambda: _minhash_arrow_sigs(spark, toks),
-    )
+    sigs = _d2_sigs(spark, sf_dir)
     bands = sigs.select(
         "doc_id",
         F.explode(
@@ -896,6 +895,7 @@ _TRAINED_RECALL_ORACLE = f"""
     """
 
 
+@mv_step("d3_normed", keys=("d3_normed",), deps=("layout_embeddings",))
 def _normed_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embeddings with their L2 norm precomputed, through the MV seam:
     the norm is an index-like derived column every cosine consumer
@@ -903,8 +903,6 @@ def _normed_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     rather than per candidate pair (O(pairs * dim)). The expression is
     exactly `sqrt(_dot_spark(e, e))` so downstream cosines match the
     inline formulation bit-for-bit."""
-    from .relcache import cached_relation
-
     emb = load_table(spark, sf_dir, "embeddings")
 
     def _build() -> DataFrame:
@@ -1214,6 +1212,7 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@mv_step("d8_assigned", keys=("d8_assigned_v2",), deps=("layout_embeddings",))
 def _ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every vector assigned to its max-cosine `_ivf_centroids` cell
     (vec_id, label, embedding, cell, norm): argmax per vector with
@@ -1225,8 +1224,6 @@ def _ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     build it once and store it. Consumers: d44/d44b/d47's cell-local
     ops and streaming/semdecontam.py, which want an n/100-cell
     partition of the corpus."""
-    from .relcache import cached_relation
-
     emb = load_table(spark, sf_dir, "embeddings")
 
     def _build_assigned() -> DataFrame:
@@ -1607,6 +1604,7 @@ def _d9_oracle() -> str:
 
 
 @query("d9_dedup_clusters", oracle=_d9_oracle())
+@mv_step("d9_clusters", keys=("d9_clusters",), deps=("d2_sigs",))
 def d9_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERS (the step after d2's pairs): connected
     components over the MinHash+LSH pair graph, then canonical-doc
@@ -1635,8 +1633,6 @@ def d9_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     actions, so d10 (and repeated gate/bench invocations) must reuse
     the materialized cluster table rather than re-iterating — the
     same MV seam the signature relations use."""
-    from .relcache import cached_relation
-
     return cached_relation(
         "d9_clusters", sf_dir, lambda: _build_d9_clusters(spark, sf_dir)
     )
@@ -2105,6 +2101,7 @@ def d15_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@mv_step("d15_grams", keys=("d15_grams",), deps=("layout_documents",))
 def _decon_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stored word-n-gram relation for decontamination: (doc_id, lang,
     h) with one row per overlapping n-gram, null h for docs shorter
@@ -2113,8 +2110,6 @@ def _decon_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpreted (no whole-stage codegen) and don't common-
     subexpression-eliminate, so an inline `split(text)` would
     re-tokenize the document once per gram — measured 3x slower."""
-    from .relcache import cached_relation
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.split(F.col("text"), " ").alias("__w")
     )
@@ -2538,6 +2533,7 @@ def _d19_oracle() -> str:
 
 
 @query("d19_embedding_clusters", oracle=_d19_oracle())
+@mv_step("d19_clusters", keys=("d19_clusters_v2",), deps=("d3_normed",))
 def d19_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-space dedup CLUSTERS — the ANN twin of d9: d7's
     sign-LSH + exact-cosine near-dup PAIRS become transitive clusters
@@ -2548,8 +2544,6 @@ def d19_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     no new primitives. Scale posture follows d9's: the CC preamble
     contracts clique-heavy duplicate groups in one pass, and the
     bucket join never goes all-pairs."""
-    from .relcache import cached_relation
-
     return cached_relation(
         # key bumped (v2) when the sign-LSH width became corpus-scaled:
         # identical at test SFs, but a store written by the fixed-8-bit
@@ -3108,19 +3102,8 @@ def d27_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact Jaccard re-checks candidates; per incoming doc the output is
     (match count, lowest-id base match, its jaccard) — min_by keyed on
     base_id, so the doubles that survive are pair-deterministic."""
-    from .relcache import cached_relation
-
-    # r15: route through _shingle_toks so a cold-store first touch via
-    # d27 pays the same guarded-parallel shingle build as d2.
     toks = _shingle_toks(spark, sf_dir)
-    # build via the same Arrow kernel as d2 (r14): a cold-store first
-    # touch must pay the cheap parallel build, not the single-task
-    # interpreted md5 storm the kernel replaced.
-    sigs = cached_relation(
-        "d2_sigs",
-        sf_dir,
-        lambda: _minhash_arrow_sigs(spark, toks),
-    )
+    sigs = _d2_sigs(spark, sf_dir)
     bands = sigs.select(
         "doc_id",
         F.explode(
@@ -3373,6 +3356,7 @@ def span_gram_rows(docs: DataFrame) -> DataFrame:
     )
 
 
+@mv_step("d30_grams", keys=("d30_grams",), deps=("layout_documents",))
 def _span_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The positional SPAN_L-gram inverted relation (doc_id, pos, g),
     through the MV seam (VERDICT r8 #3; the t_word_tf precedent cut
@@ -3383,8 +3367,6 @@ def _span_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     Stored once per dataset content; every consumer compiles to a
     parquet scan instead of re-paying the tokenize + explode + gram
     hash per run."""
-    from .relcache import cached_relation
-
     docs = load_table(spark, sf_dir, "documents")
     return cached_relation(
         "d30_grams", sf_dir, lambda: span_gram_rows(docs)
@@ -4307,19 +4289,7 @@ def d37_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     decile-grain (≤11 rows) and map-side combined. At 100 TB this
     inherits d2's scale posture wholesale — the added terms are
     per-candidate-row expressions and a fixed-grain reduce."""
-    from .relcache import cached_relation
-
-    # r15: route through _shingle_toks so a cold-store first touch via
-    # d37 pays the same guarded-parallel shingle build as d2.
-    toks = _shingle_toks(spark, sf_dir)
-    # build via the same Arrow kernel as d2 (r14): a cold-store first
-    # touch must pay the cheap parallel build, not the single-task
-    # interpreted md5 storm the kernel replaced.
-    sigs = cached_relation(
-        "d2_sigs",
-        sf_dir,
-        lambda: _minhash_arrow_sigs(spark, toks),
-    )
+    sigs = _d2_sigs(spark, sf_dir)
     bands = sigs.select(
         "doc_id",
         F.explode(
@@ -4949,6 +4919,11 @@ def d42_embed_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 LM_PPM = 1_000_000  # probability scale (parts-per-million)
 
 
+@mv_step(
+    "d43_lm_score",
+    keys=("d43_doc_lm_score",),
+    deps=("layout_documents",),
+)
 def _d43_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document integer LM score: the stored score-at-ingest
     artifact (CCNet scores every doc once against its trained LM).
@@ -4956,8 +4931,6 @@ def _d43_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange for the bigram counts (map-side combined), a
     dictionary-sized prefix agg + join to form the probability
     table, the gram-keyed join-back, and the per-doc agg."""
-    from .relcache import cached_relation
-
     def _build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "lang", F.split(F.col("text"), " ").alias("__w")
@@ -6039,6 +6012,11 @@ def _d49_assign(spark: SparkSession, vecs: DataFrame, codebook: DataFrame) -> Da
     )
 
 
+@mv_step(
+    "d49_codebook",
+    keys=("d49_codebook_v3",),
+    deps=("layout_embeddings",),
+)
 def _d49_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The TRAINED codebook (cid, c: array<bigint>) — one Lloyd update
     from the fixed-count seed — through the MV seam (VERDICT r8 #4/#6).
@@ -6053,8 +6031,6 @@ def _d49_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Spark MLlib dense-update layout); at 100 TB further rounds
     iterate exactly like this with a lineage checkpoint per round (the
     d9 connected-components discipline)."""
-    from .relcache import cached_relation
-
     def _build() -> DataFrame:
         # inputs constructed INSIDE the closure (r15): a store-warm
         # call must cost a cache lookup, not a plan construction
@@ -6161,6 +6137,11 @@ def _trained_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@mv_step(
+    "trained_assigned",
+    keys=("ivf_trained_assigned_v2",),
+    deps=("d49_codebook",),
+)
 def _trained_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE trained IVF-PQ index (vec_id, label, v, vnorm, cell,
     code_1..code_M), through the MV seam — the single index relation
@@ -6171,8 +6152,6 @@ def _trained_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan; every consumer compiles to a plain scan instead of re-paying
     the n x k pass. The L2 norm is stored WITH the index (d3's
     _normed_embeddings trick) so search joins fold one dot per pair."""
-    from .relcache import cached_relation
-
     def _build() -> DataFrame:
         # r14: _assign_arrow kernel — cell argmax AND all PQ_M sub-code
         # argmins in one batch sweep, one output row per vector, no
@@ -6245,6 +6224,7 @@ def _pr_round(edges: DataFrame, rank: DataFrame) -> DataFrame:
     )
 
 
+@mv_step("dup_edges", keys=("dup_edges",), deps=("d2_sigs",))
 def _dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The symmetric near-dup edge relation (src, dst) through the MV
     seam (`dup_edges`) — the d2 pair graph both directions. Stored so
@@ -6252,8 +6232,6 @@ def _dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of re-deriving the banded candidate join per round: the
     same discipline as the `d2_sigs`/`d9_clusters` MVs, and exactly
     what a warehouse deployment materializes before running PageRank."""
-    from .relcache import cached_relation
-
     def _build() -> DataFrame:
         pairs = d2_minhash_pairs(spark, sf_dir).select("doc_a", "doc_b")
         return pairs.select(
@@ -6265,6 +6243,7 @@ def _dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cached_relation("dup_edges", sf_dir, _build)
 
 
+@mv_step("d50_rank1", keys=("d50_rank1",), deps=("dup_edges",))
 def _d50_rank1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-1 PageRank relation (src, d, r) through the MV seam
     (`d50_rank1`): degree + one power-iteration step from the uniform
@@ -6272,8 +6251,6 @@ def _d50_rank1(spark: SparkSession, sf_dir: str) -> DataFrame:
     was the one consistently straddling the budget line because it
     paid BOTH unrolled rounds; storing round 1 (the d30/d49 precedent)
     leaves exactly one round's two shuffles live."""
-    from .relcache import cached_relation
-
     def _build() -> DataFrame:
         edges = _dup_edges(spark, sf_dir)
         deg = edges.groupBy("src").agg(F.count("*").cast("long").alias("d"))
@@ -9213,24 +9190,11 @@ def _d74_tvd_all_dims(sd: DataFrame) -> DataFrame:
     )
 
 
-@query("d74_source_drift", oracle=_d74_oracle())
-def d74_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per ingest source: document count and total-variation distance
-    (integer ppm) between the source's distribution and the corpus
-    profile, over two dimensions — language, and d70's length-bucket
-    ladder. A source whose feed goes bad (language mix shifts, docs
-    truncate) lights up here before it skews a training mixture; TVD
-    is the no-log drift distance, so every value is floored-ppm
-    BIGINT arithmetic, exact on both engines. The share grid is built
-    source x dim INCLUDING empty cells (a dimension value a source
-    lacks contributes its full corpus share to the distance — a LEFT
-    join from the grid, not from the observed pairs).
-
-    Scale shape: per dimension, ONE map-side-combinable (source, dim)
-    count is the only corpus-sized exchange; everything after is
-    sources x dim-domain dictionary arithmetic (grid crossJoins are
-    broadcast, sources x langs / sources x ~10 buckets rows). The
-    final card is one row per source at any corpus size."""
+@mv_step("d74_dims", keys=("d74_dims_v1",), deps=("layout_documents",))
+def _d74_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """d74's stored (source, dname, dval, n) counts: the one corpus-
+    sized, map-side-combinable aggregate, over language and d70's
+    length-bucket ladder."""
     docs = load_table(spark, sf_dir, "documents")
     toks = F.size(
         F.expr("regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]', 0)")
@@ -9254,9 +9218,28 @@ def d74_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("long").alias("n")
         )
 
-    from .relcache import cached_relation
+    return cached_relation("d74_dims_v1", sf_dir, _build_sd)
 
-    sd = cached_relation("d74_dims_v1", sf_dir, _build_sd)
+
+@query("d74_source_drift", oracle=_d74_oracle())
+def d74_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per ingest source: document count and total-variation distance
+    (integer ppm) between the source's distribution and the corpus
+    profile, over two dimensions — language, and d70's length-bucket
+    ladder. A source whose feed goes bad (language mix shifts, docs
+    truncate) lights up here before it skews a training mixture; TVD
+    is the no-log drift distance, so every value is floored-ppm
+    BIGINT arithmetic, exact on both engines. The share grid is built
+    source x dim INCLUDING empty cells (a dimension value a source
+    lacks contributes its full corpus share to the distance — a LEFT
+    join from the grid, not from the observed pairs).
+
+    Scale shape: per dimension, ONE map-side-combinable (source, dim)
+    count is the only corpus-sized exchange; everything after is
+    sources x dim-domain dictionary arithmetic (grid crossJoins are
+    broadcast, sources x langs / sources x ~10 buckets rows). The
+    final card is one row per source at any corpus size."""
+    sd = _d74_dims(spark, sf_dir)
     tvd = _d74_tvd_all_dims(sd)
     counts = (
         sd.where(F.col("dname") == "lang")

@@ -25,6 +25,7 @@ from ..tables import load_table
 from .common import USER_DAY_CTE, user_day
 from .joins import DEC
 from .registry import query
+from .relcache import cached_relation, mv_step
 
 DATE_FMT = "yyyy-MM-dd"
 
@@ -237,6 +238,7 @@ _NARRATIVE_ROWS_CTE = """
 """
 
 
+@mv_step("narrative_rows", keys=("narrative_rows_v2",), deps=("narr_cand",))
 def _narrative_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(date, user_id, tag, neg, sector, entity) — the real regex
     tagger + finance filter on the Spark side (the oracle uses the
@@ -246,8 +248,6 @@ def _narrative_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup the reference materializes as a table; e3 and e4 both read
     it, and e3 alone consumes it from three aggregation paths — the
     regex tagging pass over the fact table must run once, not 4x."""
-    from .relcache import cached_relation
-
     return cached_relation(
         "narrative_rows_v2", sf_dir, lambda: _build_narrative_rows(spark, sf_dir)
     )
@@ -805,6 +805,7 @@ def e6_sector_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@mv_step("narr_anch90", keys=("narr_anch90_v2",), deps=("narrative_rows",))
 def _anchored_win90(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared 90-day anchored narrative relation for e7/e8/e11: the
     windowed rows with the gaps-and-islands anchor. All three queries
@@ -812,8 +813,6 @@ def _anchored_win90(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sector and entity are functionally dependent on user_id), so the
     anchor column is identical — computed once per dataset through the
     relcache MV seam instead of once per query."""
-    from .relcache import cached_relation
-
     def build() -> DataFrame:
         rows = _narrative_rows(spark, sf_dir)
         tgt = F.broadcast(

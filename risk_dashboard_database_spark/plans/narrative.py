@@ -25,6 +25,7 @@ from ..operators.sessionize import episodes
 from ..tables import load_table
 from .common import USER_DAY_CTE, user_day
 from .registry import query
+from .relcache import cached_relation, mv_step
 from .synth import K_SQL, k_col, source_host_col, title_col
 from ..functions.urls import is_financial_routine
 
@@ -109,6 +110,7 @@ _TAG_ORDER_SQL = (
 )
 
 
+@mv_step("narr_cand", keys=("narr_cand_v2",), deps=("layout_events",))
 def narrative_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The regex-tagged candidate relation (date, user_id, tag — tag
     NULL when no family matched OR a low-priority suppressor fired),
@@ -127,7 +129,6 @@ def narrative_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     a bound boolean column (codegen does not CSE repeated rlikes, and
     the crisis-blocker family feeds six suppressor combinations),
     (3) combine the booleans into the tag. Still one scan, map-only."""
-    from .relcache import cached_relation
     from ..functions.narrative_rules import family_flags, primary_tag_from_flags
 
     def _build() -> DataFrame:

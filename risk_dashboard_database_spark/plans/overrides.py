@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from ..tables import load_table
 from .registry import query
+from .relcache import cached_relation, mv_step
 
 DATE_FMT = "yyyy-MM-dd"
 
@@ -48,6 +49,7 @@ def _label_case(expr: F.Column) -> F.Column:
     return c.otherwise("positive")
 
 
+@mv_step("override_items", keys=("override_items",), deps=("layout_events",))
 def items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fact side: events + derived raw/llm label+control layers.
 
@@ -57,8 +59,6 @@ def items(spark: SparkSession, sf_dir: str) -> DataFrame:
     (p2/a2/a3/j4/e5 and both override tables) reads the same enriched
     relation, so the JSON k-parse + label derivation runs once per
     dataset instead of once per consumer."""
-    from .relcache import cached_relation
-
     return cached_relation("override_items", sf_dir, lambda: _build_items(spark, sf_dir))
 
 

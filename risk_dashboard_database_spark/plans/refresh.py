@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from ..sources.sinks import replace_window, write_date_partitioned
 from .common import user_day
 from .registry import QUERIES
+from .relcache import MV_STEPS
 
 # MV name -> (builder query name, partition column). Order IS the
 # dependency order; later entries may read earlier materializations.
@@ -76,96 +77,35 @@ def refresh_aggregates(
 # built concurrently (Spark's scheduler is thread-safe; each thread
 # submits independent jobs).
 #
-# Each step names the relcache keys it materializes and the accessor
-# that owns them; calling the accessor IS the build — cached_relation
-# writes the parquet eagerly on first call, so no extra action is
-# needed. Steps whose MVs derive from other MVs declare deps so the
-# parent is always store-warm (and hence a plain scan) when the child
-# compiles its build plan.
-# r15 (guide §2.6, VERDICT r14 #7): the old single "layouts" step
-# warmed all five fact tables SEQUENTIALLY and gated nearly every
-# other step behind the whole batch, serializing the refresh start.
-# Each table's re-layout is now its own step (independent — they run
-# concurrently) and every consumer depends only on the table(s) its
-# build actually scans, so d2_sigs starts the moment documents'
-# layout exists instead of waiting for lineitem's. The layout_* key
-# names keep the wildcard convention: the re-layout seam is
-# scale-gated, so tiny datasets legitimately materialize nothing.
-_LAYOUT_TABLES = ("lineitem", "orders", "events", "documents", "embeddings")
-
-MV_STORE_DAG: list[tuple[str, tuple[str, ...], tuple[str, ...]]] = [
-    # step            produces (relcache keys)            deps (steps)
-    *[
-        (f"layout_{t}", (f"layout_{t}*",), ())
-        for t in _LAYOUT_TABLES
-    ],
-    ("user_day",      ("user_day",),                      ("layout_events",)),
-    ("override_items", ("override_items",),               ("layout_events",)),
-    # narrative keys at _v2 since r14: the full-regex-surface port
-    # changed the narr_cand build formula, and the two relations built
-    # ON it re-key with it (the MV store content-addresses datasets,
-    # not code — a stale key would silently serve pre-port tags).
-    ("narr_cand",     ("narr_cand_v2",),                  ("layout_events",)),
-    ("narrative_rows", ("narrative_rows_v2",),            ("narr_cand",)),
-    ("narr_anch90",   ("narr_anch90_v2",),                ("narrative_rows",)),
-    # u3_evidence dropped in r14: the aligned union is no longer
-    # stored — u3_codes/u3_enc fold it in-flight (see u3_evidence_union)
-    ("u3",            ("u3_codes", "u3_enc"),
-     ("layout_lineitem", "layout_orders", "layout_events")),
-    ("d2_sigs",       ("d2_toks", "d2_sigs"),             ("layout_documents",)),
-    ("d9_clusters",   ("d9_clusters",),                   ("d2_sigs",)),
-    ("dup_edges",     ("dup_edges",),                     ("d2_sigs",)),
-    ("d50_rank1",     ("d50_rank1",),                     ("dup_edges",)),
-    ("d3_normed",     ("d3_normed",),                     ("layout_embeddings",)),
-    ("d19_clusters",  ("d19_clusters_v2",),               ("d3_normed",)),
-    # d8_assigned (the every-100th-vector index, _ivf_assigned) serves
-    # only the cell-local ops d44/d44b/d47 and the streaming
-    # semantic-decontamination gate; the IVF/PQ search family reads
-    # trained_assigned.
-    ("d8_assigned",   ("d8_assigned_v2",),                ("layout_embeddings",)),
-    ("d49_codebook",  ("d49_codebook_v3",),               ("layout_embeddings",)),
-    ("trained_assigned", ("ivf_trained_assigned_v2",),       ("d49_codebook",)),
-    ("d15_grams",     ("d15_grams",),                     ("layout_documents",)),
-    ("d30_grams",     ("d30_grams",),                     ("layout_documents",)),
-    ("t_tri_grams",   ("t_tri_grams",),                   ("layout_documents",)),
-    ("t_word_tf",     ("t_word_tf",),                     ("layout_documents",)),
-    ("d43_lm_score",  ("d43_doc_lm_score",),              ("layout_documents",)),
-]
+# The DAG is generated from the `relcache.mv_step` declarations, one
+# on each accessor that owns store keys: calling the accessor IS the
+# build (cached_relation writes the parquet eagerly on first call).
+# A step's deps name the steps whose MVs its build reads, so each
+# parent is store-warm (a plain scan) when the child compiles its
+# build plan. Every declaring module is imported by `plans/__init__`
+# before this module, so MV_STEPS is complete here.
 
 
-def _mv_warmer(step: str):
-    """Accessor that owns the step's relcache key(s). Imported lazily
-    to keep module import light and avoid cycles."""
-    from ..tables import load_table
-    from . import dedup, endpoints, narrative, overrides, textstats, unions
-    from .common import user_day as user_day_mv
+def _ordered_dag() -> list[tuple[str, tuple[str, ...], tuple[str, ...]]]:
+    """(step, keys, deps) for every declared step, most transitive
+    dependents first, then by name. refresh_all submits the steps that
+    become ready together in this order, so among them the one feeding
+    the most steps starts first; a dep always has more dependents than
+    its child, so the order is also topological."""
+    dependents: dict[str, set[str]] = {s: set() for s in MV_STEPS}
 
-    if step.startswith("layout_"):
-        table = step.removeprefix("layout_")
-        return lambda spark, sf_dir: load_table(spark, sf_dir, table)
+    def mark(step: str, dependent: str) -> None:
+        for dep in MV_STEPS[step][2]:
+            dependents[dep].add(dependent)
+            mark(dep, dependent)
 
-    return {
-        "user_day": user_day_mv,
-        "override_items": overrides.items,
-        "narr_cand": narrative.narrative_candidates,
-        "narrative_rows": endpoints._narrative_rows,
-        "narr_anch90": endpoints._anchored_win90,
-        "u3": unions.u3_evidence_union,
-        "d2_sigs": dedup.d2_minhash_pairs,
-        "d9_clusters": dedup.d9_dedup_clusters,
-        "dup_edges": dedup._dup_edges,
-        "d50_rank1": dedup._d50_rank1,
-        "d19_clusters": dedup.d19_embedding_clusters,
-        "d3_normed": dedup._normed_embeddings,
-        "d8_assigned": dedup._ivf_assigned,
-        "d49_codebook": dedup._d49_codebook,
-        "trained_assigned": dedup._trained_assigned,
-        "d15_grams": dedup._decon_grams,
-        "d30_grams": dedup._span_grams,
-        "t_tri_grams": textstats.t_ngram_docfreq,
-        "t_word_tf": textstats._word_tf,
-        "d43_lm_score": dedup._d43_doc_scores,
-    }[step]
+    for step in MV_STEPS:
+        mark(step, step)
+    order = sorted(MV_STEPS, key=lambda s: (-len(dependents[s]), s))
+    return [(s, MV_STEPS[s][1], MV_STEPS[s][2]) for s in order]
+
+
+MV_STORE_DAG = _ordered_dag()
 
 
 def refresh_all(
@@ -187,7 +127,7 @@ def refresh_all(
 
     def run_step(step: str) -> None:
         t0 = _time.perf_counter()
-        _mv_warmer(step)(spark, sf_dir)
+        MV_STEPS[step][0](spark, sf_dir)
         timings[step] = round(_time.perf_counter() - t0, 3)
 
     # Event-driven scheduling, no wave barriers (ADVICE r7): each step

@@ -7,13 +7,9 @@ tables) as Postgres MVs/tables and reuses them across endpoints
 writes). Those MVs are DURABLE: they outlive a connection, and every
 query that reads one compiles to a scan of the stored table.
 
-Earlier rounds modeled this seam as a session-persisted DataFrame
-(`.persist()`), which made compiled plan shape depend on what the
-session cache happened to hold: a consumer compiled against a cold
-cache inlined the whole build plan (e6 at 14 exchanges vs 4 warm) and
-paid the fact-sized build on every new session. This module fixes that
-by writing each relation as parquet under a content-fingerprinted path
-and always returning a plain scan of the written files:
+Each relation is written as parquet under a content-fingerprinted
+path, and `cached_relation` always returns a plain scan of the
+written files:
 
 - plan shape is deterministic — every consumer sees `Scan parquet`,
   never an inlined build tree or an InMemoryRelation;
@@ -37,14 +33,31 @@ are atomic (write to a per-pid temp dir, os.rename into place); a
 bounded number of dataset fingerprints is kept per relation (LRU by
 mtime, refreshed on use) so test-tmp datasets cannot grow the store
 without bound.
+
+Concurrency: inside one process, the miss -> build -> publish path of
+a (key, fingerprint) runs under that pair's lock, so threads that miss
+together (refresh_all's concurrent steps, a query racing a refresh)
+build once and the rest read the published files. Across processes the
+atomic rename decides the winner.
+
+A store that cannot be written (read-only checkout) is swapped on the
+first miss for a private directory under `tempfile.gettempdir()`,
+with a warning; the build lands there and is still read back as a scan.
+
+Every store key is declared once, with `mv_step`, on the accessor that
+builds it; `plans/refresh.py` derives the refresh DAG from those
+declarations.
 """
 
 from __future__ import annotations
 
+import atexit
 import errno
 import hashlib
 import os
 import shutil
+import tempfile
+import threading
 import time
 import warnings
 from collections.abc import Callable
@@ -60,14 +73,46 @@ KEEP_DATASETS = 4
 TMP_REAP_SECONDS = 6 * 3600
 
 # (key, fingerprint) -> scan DataFrame for this session. Nothing is
-# persisted in memory (except the read-only-store fallback); this only
-# avoids re-creating the reader on every call.
+# persisted in memory; this only avoids re-creating the reader on
+# every call.
 _CACHE: dict[tuple[str, str], DataFrame] = {}
 
 # sf_dir -> (stat signature, content fingerprint). The stat signature
 # (names/sizes/mtimes — microseconds to compute) is rechecked on every
 # call; the 8 KiB content reads rerun only when it changes.
 _FP: dict[str, tuple[str, str]] = {}
+
+# (key, fingerprint) -> the lock its builders take. Never cleared: a
+# lock dropped while held would let the next thread build beside its
+# holder. One entry per (key, dataset) the process has missed on.
+_BUILD_LOCKS: dict[tuple[str, str], threading.Lock] = {}
+
+# Guards _BUILD_LOCKS and the read-only-store redirect of MV_ROOT.
+_LOCK = threading.Lock()
+
+Accessor = Callable[[SparkSession, str], DataFrame]
+
+# refresh step -> (accessor, store keys it publishes, steps it reads).
+# Filled by `mv_step` as the plan modules import; `plans/refresh.py`
+# orders it into MV_STORE_DAG.
+MV_STEPS: dict[str, tuple[Accessor, tuple[str, ...], tuple[str, ...]]] = {}
+
+
+def mv_step(
+    step: str, keys: tuple[str, ...], deps: tuple[str, ...] = ()
+) -> Callable[[Accessor], Accessor]:
+    """Declare `fn(spark, sf_dir)` as the refresh step `step`: calling it
+    publishes the store `keys` (a trailing `*` matches keys that a
+    scale-gated build may or may not write) once the `deps` steps have
+    published theirs. Returns `fn` unchanged."""
+
+    def deco(fn: Accessor) -> Accessor:
+        if step in MV_STEPS:
+            raise ValueError(f"duplicate MV step {step!r}")
+        MV_STEPS[step] = (fn, tuple(keys), tuple(deps))
+        return fn
+
+    return deco
 
 
 def _stat_sig(sf_dir: str) -> str:
@@ -181,19 +226,13 @@ def _pid_alive(tmp_dir_name: str) -> bool:
 
 
 def _store_writable() -> bool:
-    """Probe once per call site that MV_ROOT accepts writes, so a real
-    write failure (disk full, bad build plan) is never misdiagnosed as
-    a read-only checkout and silently swallowed. The probe name is
-    thread-unique (threading.get_ident) — two threads of one process
-    probing concurrently must not delete each other's file and read
-    the FileNotFoundError as 'read-only'."""
-    import threading
-
+    """Probe that MV_ROOT accepts writes. Run on each miss (under
+    _LOCK, so the pid-named probe is private to this call), so a real
+    write failure later (disk full, bad build plan) propagates instead
+    of being read as a read-only checkout."""
     try:
         os.makedirs(MV_ROOT, exist_ok=True)
-        probe = os.path.join(
-            MV_ROOT, f".probe-{os.getpid()}-{threading.get_ident()}"
-        )
+        probe = os.path.join(MV_ROOT, f".probe-{os.getpid()}")
         with open(probe, "w") as f:
             f.write("w")
         try:
@@ -205,145 +244,155 @@ def _store_writable() -> bool:
         return False
 
 
+def _writable_root() -> str:
+    """MV_ROOT, swapped for a private directory under
+    tempfile.gettempdir() when the store refuses writes (read-only
+    checkout). The swap lasts for the process and the directory is
+    removed at exit."""
+    global MV_ROOT
+    with _LOCK:
+        if not _store_writable():
+            private = tempfile.mkdtemp(prefix="spark-graft-mv-")
+            atexit.register(shutil.rmtree, private, True)
+            warnings.warn(
+                f"MV store {MV_ROOT!r} is not writable; this process "
+                f"builds its MVs into {private!r}",
+                stacklevel=3,
+            )
+            MV_ROOT = private
+        return MV_ROOT
+
+
+def _touch(path: str) -> None:
+    """Refresh LRU recency on EVERY use: another process's _prune must
+    see in-service datasets as recent, or it could evict them
+    mid-query (mtime otherwise records build time only)."""
+    try:
+        os.utime(path)
+    except OSError:
+        pass
+
+
+def _publish(path: str, df: DataFrame) -> None:
+    """Write df to `path` via a per-pid temp dir and an atomic rename:
+    a concurrent builder of the same (key, fingerprint) in another
+    process can never leave the published path half-written — whoever
+    renames first wins, the loser reads the winner's files. Write
+    errors here are REAL (the store is writable) and propagate."""
+    tmp = f"{path}.tmp-{os.getpid()}"
+    try:
+        # maxRecordsPerFile: a 1-partition build (common when the
+        # source scan is serial) would otherwise emit ONE part
+        # file, making every consumer of the MV scan single-
+        # threaded — the same unsplittable-layout disease the
+        # tables.py re-layout seam fixes for sources. Chunking the
+        # write keeps the build plan and row order (so any build-
+        # side time/key clustering survives for min/max pruning)
+        # while giving downstream scans file-granular splits.
+        df.write.option("maxRecordsPerFile", 50_000).mode(
+            "overwrite"
+        ).parquet(tmp)
+    except BaseException:
+        # the error is real and propagates, but never leave the
+        # half-written temp behind (worst offender in a disk-full
+        # incident is the leftover junk itself)
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    try:
+        os.rename(tmp, path)
+    except OSError as exc:
+        # Either a concurrent builder won the race (fine: read its
+        # complete output) or the rename failed for another reason
+        # and `path` is junk. Distinguish via the _SUCCESS marker —
+        # a completed Spark parquet write always has one. Only
+        # treat the path as a wreck when the errno actually means
+        # "destination occupied" (EEXIST/ENOTEMPTY); other errnos
+        # (EACCES, EXDEV, ...) are real publish failures and the
+        # rival's output — if any — must not be rmtree'd out from
+        # under a reader.
+        if exc.errno not in (errno.EEXIST, errno.ENOTEMPTY):
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        if not os.path.exists(os.path.join(path, "_SUCCESS")):
+            # Move the suspected wreck ASIDE, never rmtree it in
+            # place (ADVICE r6): between the _SUCCESS check and an
+            # in-place deletion, a rival can clean the same junk
+            # and complete its own publish — the deletion would
+            # then destroy the rival's finished MV under a reader.
+            # The pid-suffixed rename freezes whatever is there
+            # under a name only we own; re-checking _SUCCESS on
+            # the frozen copy is race-free.
+            wreck = f"{path}.wreck-{os.getpid()}"
+            try:
+                os.rename(path, wreck)
+            except OSError:
+                pass  # a rival already moved or reaped it
+            else:
+                if os.path.exists(os.path.join(wreck, "_SUCCESS")):
+                    # We grabbed a COMPLETE publish that a rival
+                    # swapped in after our check. Put it back if
+                    # the name is still free; if a third publish
+                    # took it, the content-addressed copies are
+                    # equivalent — drop ours.
+                    try:
+                        os.rename(wreck, path)
+                    except OSError:
+                        shutil.rmtree(wreck, ignore_errors=True)
+                else:
+                    shutil.rmtree(wreck, ignore_errors=True)
+            try:
+                os.rename(tmp, path)
+            except OSError:
+                # A rival can still win the re-publish; if ITS
+                # publish completed, read it — only raise when
+                # nobody produced a complete MV.
+                if not os.path.exists(os.path.join(path, "_SUCCESS")):
+                    shutil.rmtree(tmp, ignore_errors=True)
+                    raise
+                shutil.rmtree(tmp, ignore_errors=True)
+        else:
+            shutil.rmtree(tmp, ignore_errors=True)  # lost the race
+
+
 def cached_relation(key: str, sf_dir: str, build: Callable[[], DataFrame]) -> DataFrame:
     """Return a scan of the materialized relation for (key, dataset
     content of sf_dir), building and writing it on first use anywhere.
 
-    Falls back to a session-persisted DataFrame if the store is not
-    writable (read-only checkout); in that mode, switching datasets
-    evicts the previous entry for the key so persisted blocks never
-    accumulate (the pre-durable-store invariant)."""
+    A miss holds the (key, fingerprint) lock through build and publish
+    and re-checks `_SUCCESS` once it holds it, so threads of one
+    process that miss together build once; the others read what the
+    first published. A store that cannot be written is redirected to
+    a private temp directory (with a warning) before the build, so the
+    result is a parquet scan in every case."""
     fp = _fingerprint(sf_dir)
-    path = os.path.join(MV_ROOT, key, fp)
     hit = _CACHE.get((key, fp))
     if hit is not None:
-        # refresh LRU recency on EVERY use (not just session-cache
-        # misses): another process's _prune must see in-service
-        # datasets as recent, or it could evict them mid-query
-        try:
-            os.utime(path)
-        except OSError:
-            pass
+        _touch(os.path.join(MV_ROOT, key, fp))
         return hit
-    # getActiveSession is thread-local; fall back to the default session
-    # so a caller invoking from a different thread than the one that
-    # built the session still resolves it (getOrCreate returns the
-    # existing default, never a fresh unconfigured session here).
-    spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        df = build()
-        if not _store_writable():
-            warnings.warn(
-                f"MV store {MV_ROOT!r} is not writable; falling back to a "
-                f"session-persisted relation for {key!r} (plan shape will "
-                "include the build tree)",
-                stacklevel=2,
-            )
-            # evict other datasets' fallback entries for this key
-            for k in [k for k in _CACHE if k[0] == key]:
-                _CACHE.pop(k).unpersist()
-            out = df.persist()
-            _CACHE[(key, fp)] = out
-            return out
-        # Write-to-temp + atomic rename: a concurrent builder of the
-        # same (key, fingerprint) can never leave the published path
-        # half-written — whoever renames first wins, the loser reads
-        # the winner's files. Write errors here are REAL (the store is
-        # writable) and propagate.
-        tmp = f"{path}.tmp-{os.getpid()}"
-        try:
-            # maxRecordsPerFile: a 1-partition build (common when the
-            # source scan is serial) would otherwise emit ONE part
-            # file, making every consumer of the MV scan single-
-            # threaded — the same unsplittable-layout disease the
-            # tables.py re-layout seam fixes for sources. Chunking the
-            # write keeps the build plan and row order (so any build-
-            # side time/key clustering survives for min/max pruning)
-            # while giving downstream scans file-granular splits.
-            df.write.option("maxRecordsPerFile", 50_000).mode(
-                "overwrite"
-            ).parquet(tmp)
-        except BaseException:
-            # the error is real and propagates, but never leave the
-            # half-written temp behind (worst offender in a disk-full
-            # incident is the leftover junk itself)
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        try:
-            os.rename(tmp, path)
-        except OSError as exc:
-            # Either a concurrent builder won the race (fine: read its
-            # complete output) or the rename failed for another reason
-            # and `path` is junk. Distinguish via the _SUCCESS marker —
-            # a completed Spark parquet write always has one. Only
-            # treat the path as a wreck when the errno actually means
-            # "destination occupied" (EEXIST/ENOTEMPTY); other errnos
-            # (EACCES, EXDEV, ...) are real publish failures and the
-            # rival's output — if any — must not be rmtree'd out from
-            # under a reader.
-            if exc.errno not in (errno.EEXIST, errno.ENOTEMPTY):
-                shutil.rmtree(tmp, ignore_errors=True)
-                raise
-            if not os.path.exists(os.path.join(path, "_SUCCESS")):
-                # Move the suspected wreck ASIDE, never rmtree it in
-                # place (ADVICE r6): between the _SUCCESS check and an
-                # in-place deletion, a rival can clean the same junk
-                # and complete its own publish — the deletion would
-                # then destroy the rival's finished MV under a reader.
-                # The pid-suffixed rename freezes whatever is there
-                # under a name only we own; re-checking _SUCCESS on
-                # the frozen copy is race-free.
-                wreck = f"{path}.wreck-{os.getpid()}"
-                try:
-                    os.rename(path, wreck)
-                except OSError:
-                    pass  # a rival already moved or reaped it
-                else:
-                    if os.path.exists(os.path.join(wreck, "_SUCCESS")):
-                        # We grabbed a COMPLETE publish that a rival
-                        # swapped in after our check. Put it back if
-                        # the name is still free; if a third publish
-                        # took it, the content-addressed copies are
-                        # equivalent — drop ours.
-                        try:
-                            os.rename(wreck, path)
-                        except OSError:
-                            shutil.rmtree(wreck, ignore_errors=True)
-                    else:
-                        shutil.rmtree(wreck, ignore_errors=True)
-                try:
-                    os.rename(tmp, path)
-                except OSError:
-                    # A rival can still win the re-publish; if ITS
-                    # publish completed, read it — only raise when
-                    # nobody produced a complete MV.
-                    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-                        shutil.rmtree(tmp, ignore_errors=True)
-                        raise
-                    shutil.rmtree(tmp, ignore_errors=True)
-            else:
-                shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-    else:
-        # refresh LRU recency so _prune never evicts the datasets
-        # actually in use (mtime otherwise records build time only)
-        try:
-            os.utime(path)
-        except OSError:
-            pass
-    _prune(os.path.join(MV_ROOT, key), keep=fp)
-    out = spark.read.parquet(path)
-    _CACHE[(key, fp)] = out
+    with _LOCK:
+        lock = _BUILD_LOCKS.setdefault((key, fp), threading.Lock())
+    with lock:
+        # getActiveSession is thread-local; fall back to the default
+        # session so a caller invoking from a different thread than the
+        # one that built the session still resolves it (getOrCreate
+        # returns the existing default, never a fresh unconfigured
+        # session here).
+        spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
+        path = os.path.join(MV_ROOT, key, fp)
+        if os.path.exists(os.path.join(path, "_SUCCESS")):
+            _touch(path)
+        else:
+            path = os.path.join(_writable_root(), key, fp)
+            _publish(path, build())
+        _prune(os.path.dirname(path), keep=fp)
+        out = spark.read.parquet(path)
+        _CACHE[(key, fp)] = out
     return out
 
 
 def clear() -> None:
     """Forget session-level reader handles (test isolation). Durable
     files stay — they are content-addressed, so reuse is always safe."""
-    for df in _CACHE.values():
-        try:
-            df.unpersist()  # no-op for plain scans; frees fallback persists
-        except Exception:
-            pass
     _CACHE.clear()
     _FP.clear()
 

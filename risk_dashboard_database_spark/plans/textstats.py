@@ -18,6 +18,7 @@ from pyspark.sql.window import Window
 
 from ..tables import load_table
 from .registry import query
+from .relcache import cached_relation, mv_step
 
 # Tiny per-language stopword lists for the n-gram/stopword language-ID
 # heuristic. Deterministic and shared verbatim with the oracles.
@@ -444,8 +445,8 @@ def t_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _tri_gram_rows(docs: DataFrame) -> DataFrame:
     """(doc_id, distinct word trigram) rows — the `t_tri_grams` MV
-    build, shared by t_ngram_docfreq and t_novelty so both profile the
-    identical gram relation."""
+    build, and the streaming novelty gate's per-batch gram rows, so
+    batch and stream profile the identical gram relation."""
     return docs.select(
         "doc_id", F.split(F.col("text"), " ").alias("__w")
     ).select(
@@ -465,6 +466,14 @@ def _tri_gram_rows(docs: DataFrame) -> DataFrame:
             )
         ).alias("gram"),
     )
+
+
+@mv_step("t_tri_grams", keys=("t_tri_grams",), deps=("layout_documents",))
+def _tri_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The stored `t_tri_grams` relation that t_ngram_docfreq, t_novelty
+    and the streaming novelty gate's dictionary all read."""
+    docs = load_table(spark, sf_dir, "documents")
+    return cached_relation("t_tri_grams", sf_dir, lambda: _tri_gram_rows(docs))
 
 
 @query(
@@ -513,10 +522,8 @@ def t_ngram_docfreq(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the shuffle, and no stage carries more than (gram, docfreq)
     pairs — at 100 TB this is the standard inverted-index profile
     build."""
-    from .relcache import cached_relation
-
     docs = load_table(spark, sf_dir, "documents")
-    grams = cached_relation("t_tri_grams", sf_dir, lambda: _tri_gram_rows(docs))
+    grams = _tri_grams(spark, sf_dir)
     freq = grams.groupBy("gram").agg(F.count("*").alias("docfreq"))
     per_doc = (
         grams.join(freq, "gram")
@@ -909,13 +916,12 @@ def t_ttr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@mv_step("t_word_tf", keys=("t_word_tf",), deps=("layout_documents",))
 def _word_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The word-grain term-frequency relation (doc_id, term, tf),
     through the MV seam: tokenize-at-ingest work shared by every
     word-grain consumer (t_tfidf today; the same artifact a search
     index or d35-style OOV audit reads)."""
-    from .relcache import cached_relation
-
     docs = load_table(spark, sf_dir, "documents")
 
     def _build() -> DataFrame:
@@ -1611,12 +1617,8 @@ def t_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     Docs too short for a trigram enter via a scan-only UNION branch,
     never a corpus-wide left join. Integer ppm via `div` (truncation
     == floor on non-negatives, both engines)."""
-    from .relcache import cached_relation
-
     docs = load_table(spark, sf_dir, "documents")
-    grams = cached_relation(
-        "t_tri_grams", sf_dir, lambda: _tri_gram_rows(docs)
-    )
+    grams = _tri_grams(spark, sf_dir)
     n_grams = grams.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_grams")
     )

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from ..tables import load_table
 from .registry import query
-from .relcache import cached_relation
+from .relcache import cached_relation, mv_step
 
 DATE_FMT = "yyyy-MM-dd"
 
@@ -129,6 +129,11 @@ def u2_key_union_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked WHERE rn = 1
     """,
 )
+@mv_step(
+    "u3",
+    keys=("u3_codes", "u3_enc"),
+    deps=("layout_lineitem", "layout_orders", "layout_events"),
+)
 def u3_evidence_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-way heterogeneous evidence union + keep-max-weight dedup (U3):
     align three differently-shaped sources to one schema with a
@@ -236,8 +241,7 @@ def u3_evidence_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def build_enc() -> DataFrame:
-        dic = cached_relation("u3_codes", sf_dir, build_codes)
-        return _ev().join(F.broadcast(dic), ["w", "suf"]).select(
+        return _ev().join(F.broadcast(codes), ["w", "suf"]).select(
             "entity_id",
             "d",
             "ucode",
@@ -245,25 +249,14 @@ def u3_evidence_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # try/finally (ADVICE r14 #1): if a build raises mid-way, the
-    # session-lifetime persist must still be released. In the
-    # read-only-store FALLBACK mode cached_relation hands back lazily
-    # persisted enc/codes plans that still reference the union —
-    # unpersisting it there would make each of them recompute the full
-    # 3-fact union on first materialization — so the union persist is
-    # kept (session-scoped, exactly the pre-durable-store behavior)
-    # whenever either returned relation is itself persisted.
-    enc = codes = None
+    # build-scoped persist must still be released. Both relations come
+    # back as parquet scans, so nothing returned still reads the union.
     try:
-        enc = cached_relation("u3_enc", sf_dir, build_enc)
         codes = cached_relation("u3_codes", sf_dir, build_codes)
+        enc = cached_relation("u3_enc", sf_dir, build_enc)
     finally:
         if "df" in ev_state:
-            fallback = any(
-                df is not None and df.storageLevel.useMemory
-                for df in (enc, codes)
-            )
-            if not fallback:
-                ev_state["df"].unpersist()
+            ev_state["df"].unpersist()
     best = enc.groupBy("entity_id", "d", "ucode").agg(F.max("pk").alias("pk"))
     # (4) decode and rebuild display strings. pk = w*2^32 - code with
     # code in [1, 2^32), so w = floor((pk-1)/2^32) + 1.

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..plans.textstats import _tri_gram_rows
+from ..plans.textstats import _tri_gram_rows, _tri_grams
 
 OUTPUT_SCHEMA = "doc_id long, n_grams long, n_novel long, novel_ppm long"
 STATE_SCHEMA = "done int"
@@ -55,13 +55,7 @@ def first_occurrence_dictionary(
     the stored `t_tri_grams` MV, exactly the relation batch t_novelty
     joins back. Persist (or re-materialize via the MV seam) before a
     long-running stream so micro-batches re-scan parquet."""
-    from ..plans.relcache import cached_relation
-    from ..tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    grams = cached_relation(
-        "t_tri_grams", sf_dir, lambda: _tri_gram_rows(docs)
-    )
+    grams = _tri_grams(spark, sf_dir)
     return grams.groupBy("gram").agg(F.min("doc_id").alias("first_doc"))
 
 

@@ -239,10 +239,6 @@ def _relayout(
     return cached_relation(f"layout_{name}", sf_dir, _build)
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view so spark.sql() plans match
     the DataFrame API paths (same Catalyst plans either way)."""

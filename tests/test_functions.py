@@ -3,6 +3,7 @@ LLM batch-classification plumbing (F1/F2), and the MV refresh graph."""
 
 from __future__ import annotations
 
+import fnmatch
 from datetime import date
 
 import pytest
@@ -163,6 +164,7 @@ def test_refresh_all_warms_every_store_mv(spark, tmp_path, monkeypatch):
         MV_STORE_DAG,
         refresh_all,
     )
+    from risk_dashboard_database_spark.tables import DEFAULT_SF_DIR
 
     monkeypatch.setattr(relcache, "MV_ROOT", str(tmp_path / "mv"))
     relcache.clear()
@@ -190,5 +192,83 @@ def test_refresh_all_warms_every_store_mv(spark, tmp_path, monkeypatch):
         relcache.clear()
         again = refresh_all(spark, "/root/testdata/sf0.001")
         assert sum(again.values()) < 0.5 * sum(timings.values())
+
+        # each step alone, in generated order, into a fresh store
+        # publishes exactly its declared keys (a wildcard key may
+        # publish nothing: the re-layout is scale-gated)
+        monkeypatch.setattr(relcache, "MV_ROOT", str(tmp_path / "mv_steps"))
+        relcache.clear()
+
+        def key_dirs() -> set[str]:
+            root = relcache.MV_ROOT
+            if not os.path.isdir(root):
+                return set()
+            return {d for d in os.listdir(root) if not d.startswith(".")}
+
+        sf = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.001")
+        for step, keys, _ in MV_STORE_DAG:
+            before = key_dirs()
+            relcache.MV_STEPS[step][0](spark, sf)
+            wild = [k for k in keys if k.endswith("*")]
+            made = {
+                k for k in key_dirs() - before
+                if not any(fnmatch.fnmatch(k, w) for w in wild)
+            }
+            assert made == set(keys) - set(wild), step
     finally:
         relcache.clear()
+
+
+def _cached_relation_keys() -> list[tuple[str, str]]:
+    """(key, file:line) for every cached_relation call in the package;
+    the one non-literal key form allowed is tables.py's layout_{name}."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "risk_dashboard_database_spark"
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = node.func
+            name = fn.id if isinstance(fn, ast.Name) else getattr(fn, "attr", None)
+            if name != "cached_relation":
+                continue
+            arg = node.args[0]
+            where = f"{path.relative_to(pkg)}:{node.lineno}"
+            if isinstance(arg, ast.Constant) and isinstance(arg.value, str):
+                found.append((arg.value, where))
+            else:
+                assert ast.unparse(arg) == "f'layout_{name}'", (
+                    f"{where}: store key must be a literal, not {ast.unparse(arg)}"
+                )
+                found.append(("layout_{name}", where))
+    return found
+
+
+def test_every_store_key_has_one_build_site_and_a_declaration():
+    """Drift guard for the MV store: each cached_relation key is
+    written at exactly one call, each is published by some declared
+    refresh step, and each declared key has a build site."""
+    from collections import Counter
+
+    from risk_dashboard_database_spark.plans.refresh import MV_STORE_DAG
+    from risk_dashboard_database_spark.tables import FACT_TABLES
+
+    found = _cached_relation_keys()
+    counts = Counter(k for k, _ in found)
+    dup = {k: [w for kk, w in found if kk == k] for k, n in counts.items() if n > 1}
+    assert not dup, f"keys built at more than one call: {dup}"
+
+    declared = [k for _, keys, _ in MV_STORE_DAG for k in keys]
+    built = set(counts) - {"layout_{name}"}
+    built |= {f"layout_{t}" for t in FACT_TABLES}
+    for key in built:
+        assert any(fnmatch.fnmatch(key, d) for d in declared), (
+            f"store key {key!r} is built but no refresh step declares it"
+        )
+    for d in declared:
+        assert any(fnmatch.fnmatch(k, d) for k in built), (
+            f"declared key {d!r} has no cached_relation call"
+        )

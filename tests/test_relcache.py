@@ -274,3 +274,105 @@ def test_publish_rename_real_error_propagates(spark, tmp_path, mv_root, monkeypa
         relcache.cached_relation(
             "k2", str(data), lambda: spark.read.parquet(str(data))
         )
+
+
+def test_concurrent_misses_build_once(spark, tmp_path, mv_root):
+    """Two threads of one process that miss on the same (key, dataset)
+    together must build once: the second waits on the pair's lock,
+    re-checks _SUCCESS and reads the first one's publish. Without the
+    lock both build into the same per-pid temp dir, which has published
+    extra copies of the rows."""
+    import os
+    import threading
+    import time
+
+    data = tmp_path / "ds"
+    spark.range(3).toDF("id").write.parquet(str(data))
+    n = 200_000
+    builds = []
+    gate = threading.Barrier(2)
+
+    def build():
+        builds.append(threading.get_ident())
+        # hold the miss open so a rival without the lock misses too
+        time.sleep(0.5)
+        return spark.range(n).toDF("id")
+
+    results, errors = [], []
+
+    def worker():
+        try:
+            gate.wait()
+            results.append(relcache.cached_relation("k", str(data), build))
+        except BaseException as exc:  # surfaced by the asserts below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=worker) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errors, errors
+    assert len(builds) == 1, f"built {len(builds)} times"
+    path = os.path.join(relcache.MV_ROOT, "k", relcache._fingerprint(str(data)))
+    published = spark.read.parquet(path)
+    assert published.count() == n
+    assert published.distinct().count() == n
+    assert [r.count() for r in results] == [n, n]
+
+
+def test_unwritable_store_redirects_to_a_private_dir(spark, tmp_path, mv_root, monkeypatch):
+    """A store nobody can write (its root sits under a regular file, so
+    even root gets ENOTDIR) is swapped for a private temp dir with a
+    warning: the result is still a parquet scan and nothing is
+    persisted in memory."""
+    import os
+    import tempfile
+
+    blocker = tmp_path / "not-a-dir"
+    blocker.write_text("x")
+    monkeypatch.setattr(relcache, "MV_ROOT", str(blocker / "mv"))
+    data = tmp_path / "ds"
+    spark.range(6).toDF("id").write.parquet(str(data))
+    jsc = spark.sparkContext._jsc
+    persisted = jsc.getPersistentRDDs().size()
+
+    with pytest.warns(UserWarning, match="not writable"):
+        df = relcache.cached_relation(
+            "k", str(data), lambda: spark.read.parquet(str(data))
+        )
+    assert df.count() == 6
+    assert "InMemoryRelation" not in df._jdf.queryExecution().toString()
+    assert jsc.getPersistentRDDs().size() == persisted
+    root = relcache.MV_ROOT
+    assert os.path.dirname(root) == tempfile.gettempdir()
+    fp = relcache._fingerprint(str(data))
+    assert os.path.exists(os.path.join(root, "k", fp, "_SUCCESS"))
+
+
+def test_u3_build_failure_releases_the_union_persist(spark, tmp_path, mv_root, monkeypatch):
+    """ADVICE r15 #2: when the u3_codes build raises after the shared
+    evidence union was persisted and materialized, u3_evidence_union's
+    finally must release it — the persisted-RDD count returns to its
+    value before the call."""
+    import os
+
+    from risk_dashboard_database_spark.plans import unions
+    from risk_dashboard_database_spark.tables import DEFAULT_SF_DIR
+
+    real = unions.cached_relation
+
+    def raising(key, sf_dir, build):
+        if key != "u3_codes":
+            return real(key, sf_dir, build)
+        build().count()  # materializes the persisted union
+        raise RuntimeError("injected u3_codes build failure")
+
+    monkeypatch.setattr(unions, "cached_relation", raising)
+    jsc = spark.sparkContext._jsc
+    persisted = jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="injected"):
+        unions.u3_evidence_union(
+            spark, os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.001")
+        )
+    assert jsc.getPersistentRDDs().size() == persisted
