@@ -1,4 +1,4 @@
-"""Operational observability: slow-query log + single-flight job lock
+"""Operational observability: slow-query log + the package's file lock
 (SURVEY §4 rows).
 
 - The reference logs every request slower than its 500 ms SLO
@@ -7,24 +7,19 @@
   query execution that records breaches to a bounded in-memory log (and
   the standard `logging` channel), exactly the signal the reference's
   log line carries: query name, elapsed seconds, threshold.
-- MV refreshes in the reference are single-flighted with a Postgres
-  advisory lock so concurrent requests can't stampede a rebuild
-  (`app.py:95-106,809-864`). The driver-side analog is a kernel
-  advisory lock (``fcntl.flock`` LOCK_EX|LOCK_NB) on a per-job lock
-  file: the first caller wins and runs, others skip — exactly the
-  reference's non-blocking ``pg_try_advisory_lock`` semantics,
-  including its crash behavior: a Postgres advisory lock dies with
-  the session, and an flock dies with the process (the kernel
-  releases it on any exit path, including SIGKILL). That removes the
-  entire stale-pid/break-protocol family the earlier O_EXCL design
-  needed — there is no stale lock to detect, no tombstone rename, no
-  breaker race (VERDICT r6 #4 / ADVICE r6 closed at the root).
-  Caveat: flock is advisory and per-machine — correct for a driver-
-  local lock_dir; on NFS its semantics depend on the mount, so a
-  multi-driver deployment should point lock_dir at local disk (each
-  driver single-flights its own refreshes; the MV store's atomic
-  content-addressed publish already makes cross-machine duplicate
-  refreshes safe).
+- The reference guards its writers with Postgres advisory locks
+  (`app.py:95-106`, `src/ingest_v2.py:77-103`). The driver-side analog
+  is `file_lock`: a kernel advisory lock (``fcntl.flock`` LOCK_EX) on a
+  per-target lock file, with the advisory lock's crash behavior: a
+  Postgres advisory lock dies with the session, and an flock dies with
+  the process (the kernel releases it on any exit path, including
+  SIGKILL), so there is no stale lock to detect or break. The sinks'
+  upserts serialize on it. MV refreshes need no cross-process lock:
+  the store's atomic content-addressed publish keeps two processes
+  refreshing one store correct (they duplicate the build work rather
+  than skip it).
+  Caveat: flock is advisory and per-machine — correct for local disk;
+  on NFS its semantics depend on the mount.
 """
 
 from __future__ import annotations
@@ -72,10 +67,10 @@ class SlowQueryLog:
 # fds of lock files currently open in THIS process. flock lives on the
 # open file description, which fork() shares (O_CLOEXEC only covers
 # exec), so a forked child that never execs — multiprocessing's 'fork'
-# start method, the Linux default — would co-hold the lock and keep the
-# job locked after the parent dies (ADVICE r7). The at-fork handler
-# closes the child's duplicates immediately, leaving the parent the
-# sole holder; its exit then releases the job as documented.
+# start method, the Linux default — would co-hold the lock and keep it
+# held after the parent dies (ADVICE r7). The at-fork handler closes
+# the child's duplicates immediately, leaving the parent the sole
+# holder; its exit then releases the lock as documented.
 #
 # The registry is guarded by a mutex that the BEFORE-fork handler
 # acquires (ADVICE r8): without it, a fork landing between another
@@ -107,52 +102,48 @@ os.register_at_fork(
 )
 
 
-@contextmanager
-def single_flight(lock_dir: str, name: str) -> Iterator[bool]:
-    """Non-blocking per-job lock: yields True for the one caller that
-    acquired it (who should run the refresh) and False for everyone
-    else (who should skip — the reference returns the cached result
-    rather than waiting, `app.py:95-106`).
+# How long file_lock waits for the current holder before it raises.
+LOCK_WAIT_S = 120.0
 
-    Implemented as ``flock(LOCK_EX | LOCK_NB)`` on a persistent
-    per-job file. The kernel releases the lock when the last open
-    file description referencing it closes — on ANY exit of the sole
-    holder: clean return, unhandled exception, SIGKILL — so a crashed
-    holder frees the job immediately and no staleness heuristic (pid
-    probe, TTL, break protocol) exists to race or starve. Two
-    inheritance channels could create a second holder and are both
-    closed: exec()ed children via O_CLOEXEC, and fork()ed children
-    that never exec (the multiprocessing 'fork' default on Linux,
-    which O_CLOEXEC does NOT cover — ADVICE r7) via an
-    ``os.register_at_fork`` handler that closes the child's duplicate
-    fd immediately after fork, leaving the parent the sole holder.
+
+@contextmanager
+def file_lock(path: str) -> Iterator[None]:
+    """Hold an exclusive lock on the file `path` for the with-block,
+    waiting up to LOCK_WAIT_S for the current holder (then
+    TimeoutError).
+
+    Implemented as ``flock(LOCK_EX)`` on a persistent lock file. The
+    kernel releases the lock when the last open file description
+    referencing it closes — on ANY exit of the sole holder: clean
+    return, unhandled exception, SIGKILL — so a crashed holder frees
+    the lock immediately and no staleness heuristic (pid probe, TTL,
+    break protocol) exists to race or starve. Two inheritance channels
+    could create a second holder and are both closed: exec()ed children
+    via O_CLOEXEC, and fork()ed children that never exec (the
+    multiprocessing 'fork' default on Linux, which O_CLOEXEC does NOT
+    cover) via the at-fork handler above. Each call opens its own file
+    description, so threads of one process exclude each other too.
     The lock file is created once and NEVER unlinked: unlinking would
     let a later caller lock a fresh inode while an older holder still
-    held the unlinked one — two simultaneous winners. File content is
-    the holder's "pid:epoch" for humans inspecting a stuck refresh;
-    no code path trusts it."""
-    os.makedirs(lock_dir, exist_ok=True)
-    path = os.path.join(lock_dir, f"{name}.lock")
+    held the unlinked one — two simultaneous holders."""
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     with _live_lock_fds_mu:  # atomic open+track w.r.t. fork
         fd = os.open(path, os.O_CREAT | os.O_RDWR | os.O_CLOEXEC, 0o644)
         _live_lock_fds.add(fd)
-    acquired = False
     try:
-        try:
-            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-            acquired = True
-        except OSError:
-            acquired = False
-        if acquired:
-            os.ftruncate(fd, 0)
-            os.write(fd, f"{os.getpid()}:{int(time.time())}".encode())
-        yield acquired
-    finally:
-        if acquired:
+        # Poll without the registry mutex, so a waiter never stalls
+        # other threads' lock opens (or a fork) for its whole wait.
+        deadline = time.monotonic() + LOCK_WAIT_S
+        while True:
             try:
-                os.ftruncate(fd, 0)
-            except OSError:
-                pass
+                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                break
+            except BlockingIOError:
+                if time.monotonic() > deadline:
+                    raise TimeoutError(f"file lock busy: {path}") from None
+                time.sleep(0.05)
+        yield
+    finally:
         with _live_lock_fds_mu:  # atomic untrack+close w.r.t. fork
             _live_lock_fds.discard(fd)
             os.close(fd)  # close releases the flock

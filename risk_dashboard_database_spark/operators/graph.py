@@ -40,6 +40,8 @@ def connected_components(
     dst: str = "dst",
     max_iter: int = 20,
     stats: dict | None = None,
+    *,
+    held: list[DataFrame],
 ) -> DataFrame:
     """Edges (undirected; pass each pair once or twice, both work) ->
     (id, label) with label = min vertex id in the component. Vertices
@@ -55,7 +57,13 @@ def connected_components(
     warning fires if the budget is exhausted before convergence, and
     `tests/test_graph.py` pins the round count on a pathological
     1024-vertex chain graph (the worst case for plain label
-    propagation: diameter = n)."""
+    propagation: diameter = n).
+
+    Every localCheckpoint the loop no longer reads is released as soon
+    as it is superseded. The result still reads two of them; they are
+    appended to `held`, and the caller must `release` them once the
+    result is written, or they stay pinned in the block manager for
+    the life of the session."""
     und0 = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     und0 = (
         und0.union(
@@ -98,13 +106,12 @@ def connected_components(
         .repartition(F.col("dst"))
         .localCheckpoint()
     )
+    release([und0])
     labels = (
         und.select(F.col("src").alias("id")).distinct()
         .withColumn("label", F.col("id"))
         .localCheckpoint()
     )
-    import gc
-
     rounds = 0
     converged = False
     # Delta frontier: only labels that CHANGED last round are offered
@@ -140,21 +147,18 @@ def connected_components(
             .localCheckpoint()
         )
         changed = new_delta.limit(1).count()
+        # Release the superseded generation now rather than when GC
+        # reaches it: left to GC, checkpoint blocks of a 50M-edge graph
+        # (the 100x near-duplicate corpus) piled up past the heap and
+        # OOM'd the JVM (BENCH_NOTES r6).
+        release([labels, delta])
         labels = new_labels
         delta = new_delta
-        # Previous rounds' checkpoint blocks are only freed when their
-        # RDDs are garbage-collected (ContextCleaner); Python's lazy GC
-        # let them pile up in the block manager — on a 50M-edge graph
-        # (the 100x near-duplicate corpus) that accumulated past the
-        # heap and OOM'd the JVM (BENCH_NOTES r6). Drop the locals
-        # that still reference the previous generation FIRST (they are
-        # rebound only at the top of the next round), then collect, so
-        # storage is genuinely bounded by two label generations.
-        del nbr, merged, hop, new_delta
-        gc.collect()
         if changed == 0:
             converged = True
             break
+    release([und, delta])
+    held += [p, labels]
     if converged:
         log.info("connected_components converged in %d rounds", rounds)
     else:
@@ -174,3 +178,13 @@ def connected_components(
     return p.join(
         labels.select(F.col("id").alias("p"), "label"), "p", "left"
     ).select("id", F.coalesce("label", "p").alias("label"))
+
+
+def release(frames: list[DataFrame]) -> None:
+    """Drop the block-manager copies of localCheckpoint()ed frames.
+    A checkpointed frame's plan is a LogicalRDD over the checkpointed
+    RDD; DataFrame.unpersist() only touches the cache manager, so the
+    RDD is unpersisted directly. Any frame that still reads one of
+    these must not run afterwards."""
+    for df in frames:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(True)

@@ -19,9 +19,10 @@ written files:
   datasets cannot accumulate cached blocks (ADVICE r2).
 
 At 100 TB this is precisely the refresh-graph design (`plans/refresh.py`
-is the scheduled flavor): the MV store is a warehouse path, scans of it
-get partition pruning and column pruning for free, and an executor loss
-or new session never recompiles or repays the build.
+is the scheduled flavor; this store is the package's only MV path): the
+MV store is a warehouse path, scans of it get partition pruning and
+column pruning for free, and an executor loss or new session never
+recompiles or repays the build.
 
 The store keys on a content fingerprint of the source dataset (file
 names, sizes, and head/tail byte hashes of every parquet in sf_dir).
@@ -64,7 +65,12 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-MV_ROOT = os.environ.get("SPARK_GRAFT_MV_DIR", "/root/repo/.mvstore")
+# The store defaults to `.mvstore` at this checkout's root, so another
+# checkout (with other builders) never serves MVs built by this one.
+MV_ROOT = os.environ.get(
+    "SPARK_GRAFT_MV_DIR",
+    os.path.abspath(os.path.join(__file__, "..", "..", "..", ".mvstore")),
+)
 
 # Datasets kept per relation key (sf0.001 + sf0.01 + sf0.1 + one spare).
 KEEP_DATASETS = 4

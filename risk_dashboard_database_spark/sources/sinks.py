@@ -16,7 +16,9 @@ Spark-first mappings: upsert = full-outer merge + atomic directory
 swap (plain parquet; Delta's MERGE INTO is the managed-table
 equivalent); delete+rebuild = dynamic partition overwrite, which at
 100 TB touches ONLY the affected date partitions — the same targeted
-recompute scope the reference uses.
+recompute scope the reference uses. Writers to one target serialize on
+its ingest lock, an flock (`observe.file_lock`) that a crashed writer
+cannot leave held.
 """
 
 from __future__ import annotations
@@ -25,36 +27,21 @@ import os
 import shutil
 import time
 import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..observe import file_lock
 
-@contextmanager
-def _ingest_lock(target_path: str, timeout: float = 120.0):
+
+def _ingest_lock(target_path: str):
     """Serialize concurrent upserts to one target — the analog of the
     reference's per-table advisory lock (`src/ingest_v2.py:77-103`),
-    which makes ingest read-modify-write atomic. An O_EXCL lock file
-    is the portable local/NFS mutex; on a real deployment the table
-    format's commit protocol (Delta/Iceberg optimistic commit) plays
-    this role."""
-    lock = target_path + ".lock"
-    os.makedirs(os.path.dirname(target_path) or ".", exist_ok=True)
-    deadline = time.monotonic() + timeout
-    while True:
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            break
-        except FileExistsError:
-            if time.monotonic() > deadline:
-                raise TimeoutError(f"ingest lock busy: {lock}")
-            time.sleep(0.05)
-    try:
-        os.close(fd)
-        yield
-    finally:
-        os.remove(lock)
+    which makes ingest read-modify-write atomic: an flock on
+    `<target>.lock` (`observe.file_lock`), which a crashed holder
+    cannot leave held. On a real deployment the table format's commit
+    protocol (Delta/Iceberg optimistic commit) plays this role."""
+    return file_lock(target_path + ".lock")
 
 
 def _atomic_swap(tmp: str, dest: str) -> None:
@@ -351,9 +338,11 @@ def apply_item_override(
     DB clock, equally external to the row).
 
     The append runs under the same advisory ingest lock as the
-    upsert sinks, so concurrent override writes serialize; MV
-    consumers re-read via the targeted refresh hook
-    (`plans/refresh.py` — refresh-on-override-write, §2.10)."""
+    upsert sinks, so concurrent override writes serialize. MV
+    consumers need no refresh hook: the store keys every MV by its
+    base dataset's content, so a changed dataset is a new key; a
+    date-partitioned derived table is recomputed per slice with
+    `merge_upsert_partitioned` / `replace_window` (§2.10)."""
     trimmed = (url_hash or "").strip()
     if not trimmed:
         raise ValueError("url_hash is required")

@@ -20,8 +20,7 @@ range-clustered multi-file copy from the durable MV store instead —
 clustered on the table's natural time/key column so parquet min/max
 stats keep pruning date-range predicates. Tables that already
 parallelize are never touched, so at 100 TB (thousands of well-sized
-files) the seam is a no-op probe. Kill switch:
-SPARK_GRAFT_NO_RELAYOUT=1.
+files) the seam is a no-op probe.
 """
 
 from __future__ import annotations
@@ -183,7 +182,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         n = _relayout_parts(path, name) if name in FACT_TABLES else 0
         meta = _META_MEMO[path] = (sig, _nanos_ts_columns(path), n)
     _, ns_cols, n = meta
-    if n >= 2 and not os.environ.get("SPARK_GRAFT_NO_RELAYOUT"):
+    if n >= 2:
         return _relayout(spark, name, sf_dir, path, ns_cols, n)
     key = ("reader", path)
     hit = memo.get(key)

@@ -1,38 +1,70 @@
 """Tests for fallback-query semantics (§4) and the executable planner
-path (F7 end-to-end)."""
+path (F7 end-to-end).
+
+The reference serves endpoints from a derived table when it exists and
+recomputes from base tables when it does not
+(`dashboard_app/app.py:3508-3563`). Here the derived -> base path is
+`relcache.cached_relation`: a hit scans the published MV; a miss, or a
+publish without `_SUCCESS`, builds from the base tables."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
+
 from risk_dashboard_database_spark.functions.planner import execute_plan, plan_query
-from risk_dashboard_database_spark.plans.fallback import read_or_rebuild
+from risk_dashboard_database_spark.plans import relcache
 
 
-def test_fallback_missing_materialization(spark, tmp_path):
-    base = spark.createDataFrame([(1, "x")], "id int, v string")
-    df, source = read_or_rebuild(spark, str(tmp_path / "nope"), lambda: base)
-    assert source == "fallback"
-    assert df.collect() == base.collect()
+@pytest.fixture()
+def base_dir(spark, tmp_path, monkeypatch):
+    """A fresh store plus a one-row base dataset."""
+    monkeypatch.setattr(relcache, "MV_ROOT", str(tmp_path / "mv"))
+    relcache.clear()
+    path = str(tmp_path / "base")
+    spark.createDataFrame([(3, "z")], "id int, v string").write.parquet(path)
+    yield path
+    relcache.clear()
 
 
-def test_fallback_prefers_materialization(spark, tmp_path):
-    mat = spark.createDataFrame([(2, "y")], "id int, v string")
-    path = str(tmp_path / "mv")
-    mat.write.parquet(path)
-    df, source = read_or_rebuild(
-        spark, path, lambda: (_ for _ in ()).throw(AssertionError("must not rebuild"))
-    )
-    assert source == "materialized"
-    assert df.collect() == mat.collect()
+def _from_base(spark, path, built):
+    def build():
+        built.append(path)
+        return spark.read.parquet(path)
+
+    return build
 
 
-def test_fallback_on_empty_materialization(spark, tmp_path):
-    empty = spark.createDataFrame([], "id int, v string")
-    path = str(tmp_path / "empty_mv")
-    empty.write.parquet(path)
-    base = spark.createDataFrame([(3, "z")], "id int, v string")
-    df, source = read_or_rebuild(spark, path, lambda: base, require_rows=True)
-    assert source == "fallback"
+def test_fallback_missing_materialization(spark, base_dir):
+    built = []
+    df = relcache.cached_relation("mv", base_dir, _from_base(spark, base_dir, built))
+    assert built == [base_dir]
+    assert [tuple(r) for r in df.collect()] == [(3, "z")]
+
+
+def test_fallback_prefers_materialization(spark, base_dir):
+    relcache.cached_relation("mv", base_dir, _from_base(spark, base_dir, []))
+    relcache.clear()  # forget the reader: the next call must hit the files
+
+    def must_not_rebuild():
+        raise AssertionError("must not rebuild")
+
+    df = relcache.cached_relation("mv", base_dir, must_not_rebuild)
+    assert [tuple(r) for r in df.collect()] == [(3, "z")]
+
+
+def test_fallback_on_empty_materialization(spark, base_dir):
+    """An empty materialization whose publish never completed (no
+    `_SUCCESS`) is not served: the base is rebuilt and replaces it."""
+    path = os.path.join(relcache.MV_ROOT, "mv", relcache._fingerprint(base_dir))
+    spark.createDataFrame([], "id int, v string").write.parquet(path)
+    os.remove(os.path.join(path, "_SUCCESS"))
+    built = []
+    df = relcache.cached_relation("mv", base_dir, _from_base(spark, base_dir, built))
+    assert built == [base_dir]
     assert df.count() == 1
+    assert os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
 def test_execute_plan_runs_routed_query(spark):

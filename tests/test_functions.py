@@ -133,24 +133,36 @@ def test_summarize_cached(spark):
 
 
 def test_refresh_aggregates_and_window(spark, tmp_path):
-    from risk_dashboard_database_spark.plans.refresh import (
-        refresh_aggregates,
-        refresh_window,
-    )
+    """The MV stack refreshes in dependency order through `refresh_all`
+    (a scan of the store serves user_day afterwards), and a targeted
+    slice recompute of a date-partitioned aggregate is `replace_window`'s
+    dynamic partition overwrite (`app.py:6105-6215`)."""
+    import os
 
-    out = str(tmp_path / "mvs")
-    paths = refresh_aggregates(spark, "/root/testdata/sf0.001", out)
-    assert set(paths) == {
-        "user_day", "p2_override_daily", "a2_control_counts",
-        "j4_entity_daily_metrics", "w1_weekly_rollup", "w2_anomaly_baselines",
-    }
-    ud = spark.read.parquet(paths["user_day"])
-    n_before = ud.count()
+    from pyspark.sql import functions as F
+
+    from risk_dashboard_database_spark.plans import relcache
+    from risk_dashboard_database_spark.plans.common import user_day
+    from risk_dashboard_database_spark.plans.refresh import MV_STORE_DAG, refresh_all
+    from risk_dashboard_database_spark.sources.sinks import (
+        replace_window,
+        write_date_partitioned,
+    )
+    from risk_dashboard_database_spark.tables import DEFAULT_SF_DIR
+
+    sf = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.001")
+    assert set(refresh_all(spark, sf)) == {s for s, _, _ in MV_STORE_DAG}
+    ud = user_day(spark, sf)
+    assert all(relcache.MV_ROOT in f for f in ud.inputFiles())
+
+    out = str(tmp_path / "user_day")
+    ud = ud.withColumn("date", F.date_format("date", "yyyy-MM-dd"))
+    write_date_partitioned(ud, out)
+    n_before = spark.read.parquet(out).count()
     assert n_before > 0
     # targeted window rebuild keeps row count identical (same input)
-    refresh_window(spark, "/root/testdata/sf0.001", out, "user_day",
-                   "2024-01-05", "2024-01-10")
-    assert spark.read.parquet(paths["user_day"]).count() == n_before
+    replace_window(spark, out, ud.where(F.col("date").between("2024-01-05", "2024-01-10")))
+    assert spark.read.parquet(out).count() == n_before
 
 
 def test_refresh_all_warms_every_store_mv(spark, tmp_path, monkeypatch):

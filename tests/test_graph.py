@@ -2,13 +2,23 @@
 
 from pyspark.sql import functions as F
 
-from risk_dashboard_database_spark.operators.graph import connected_components
+from risk_dashboard_database_spark.operators.graph import connected_components, release
+
+
+def _persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
 def _labels(spark, edges):
+    """Labels by vertex; the run's checkpoints are all released after."""
     df = spark.createDataFrame(edges, "src long, dst long")
-    out = connected_components(df)
-    return {r["id"]: r["label"] for r in out.collect()}
+    before = _persisted(spark)
+    held = []
+    out = connected_components(df, held=held)
+    got = {r["id"]: r["label"] for r in out.collect()}
+    release(held)
+    assert _persisted(spark) == before
+    return got
 
 
 def test_two_separate_pairs(spark):
@@ -87,14 +97,18 @@ def test_chain_round_count_is_logarithmic(spark):
         [(i, i + 1) for i in range(n - 1)], "src long, dst long"
     )
     stats = {}
-    out = connected_components(df, max_iter=40, stats=stats)
+    held = []
+    out = connected_components(df, max_iter=40, stats=stats, held=held)
     assert {r["label"] for r in out.collect()} == {0}
+    release(held)
     assert stats["converged"]
     assert stats["rounds"] <= math.ceil(math.log2(n)) + 3, stats
 
 
 def test_empty_edge_frame(spark):
     df = spark.createDataFrame([], "src long, dst long")
-    out = connected_components(df)
+    held = []
+    out = connected_components(df, held=held)
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == ["id", "label"]
+    release(held)

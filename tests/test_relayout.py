@@ -60,13 +60,9 @@ def test_unsplittable_fact_is_relayouted(spark, fat_dataset):
 
 def test_relayout_preserves_contents(spark, fat_dataset):
     on = tables.load_table(spark, fat_dataset, "lineitem")
-    os.environ["SPARK_GRAFT_NO_RELAYOUT"] = "1"
-    try:
-        off = tables.load_table(spark, fat_dataset, "lineitem")
-        assert on.count() == off.count() == 200_000
-        assert on.exceptAll(off).isEmpty() and off.exceptAll(on).isEmpty()
-    finally:
-        os.environ.pop("SPARK_GRAFT_NO_RELAYOUT", None)
+    off = spark.read.parquet(os.path.join(fat_dataset, "lineitem.parquet"))
+    assert on.count() == off.count() == 200_000
+    assert on.exceptAll(off).isEmpty() and off.exceptAll(on).isEmpty()
 
 
 def test_relayout_clusters_by_time(spark, fat_dataset):

@@ -4,6 +4,7 @@ TTL cache)."""
 
 from __future__ import annotations
 
+import fcntl
 import os
 
 import pytest
@@ -137,7 +138,48 @@ def test_merge_upsert_concurrent_writers_no_lost_update(spark, tmp_path):
     assert got[2] == "onlyA" and got[3] == "onlyB"
     # conflicting key: last writer to commit wins
     assert got[1] == order[-1]
-    assert not os.path.exists(target + ".lock")
+    # the lock file stays (the flock lives on it), but nothing holds it
+    fd = os.open(target + ".lock", os.O_RDWR)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+    finally:
+        os.close(fd)
+
+
+def test_merge_upsert_after_lock_holder_is_killed(spark, tmp_path):
+    """A writer SIGKILLed while it holds a target's ingest lock (OOM
+    kill, crash) must not jam that target: the next upsert proceeds at
+    once instead of waiting out the lock deadline and raising."""
+    import signal
+    import subprocess
+    import sys
+    import time
+
+    target = str(tmp_path / "tgt_killed")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    holder = subprocess.Popen(
+        [
+            sys.executable,
+            "-c",
+            f"import sys, time; sys.path.insert(0, {repo!r})\n"
+            "from risk_dashboard_database_spark.sources.sinks import _ingest_lock\n"
+            f"with _ingest_lock({target!r}):\n"
+            "    print('held', flush=True)\n"
+            "    time.sleep(60)\n",
+        ],
+        stdout=subprocess.PIPE,
+        text=True,
+    )
+    try:
+        assert holder.stdout.readline().strip() == "held"
+    finally:
+        holder.send_signal(signal.SIGKILL)
+        holder.wait()
+    t0 = time.monotonic()
+    upd = spark.createDataFrame([(1, "after")], "id int, label string")
+    merge_upsert(spark, target, upd, keys=["id"])
+    assert time.monotonic() - t0 < 30
+    assert [tuple(r) for r in spark.read.parquet(target).collect()] == [(1, "after")]
 
 
 def _partition_files(path: str) -> dict[str, tuple[int, int]]:
