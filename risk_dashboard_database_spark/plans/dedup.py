@@ -15,7 +15,7 @@ Components, each a driver-checked query:
                         agree with on its candidates)
 - d6_simhash          — 32-bit SimHash fingerprints from token hashes
 - d3_ann_topk         — brute-force cosine top-k over embeddings
-                        (broadcast queries; the correctness baseline)
+                        (broadcast probes; the correctness baseline)
 - d5_ann_lsh_bucket   — sign-LSH bucketed ANN (the scale path: probes
                         only search their bucket)
 - d23/d24 (PQ)        — product-quantization code index + IVF-PQ
@@ -27,10 +27,13 @@ Spark and DuckDB); MinHash uses the lexicographic order of md5 hex
 strings as its random total order, so Spark and the oracle agree
 bit-for-bit. Cosines are left-fold dot products over float->double
 casts — the same IEEE expression tree on both engines, so raw doubles
-hash-match without rounding.
+hash-match without rounding. In Spark SQL the fold is `_dot_spark`;
+in numpy it is `vecops.fold_cos`, the one fold behind the probe top-k
+kernel of d3, d36 and d66 (`vecops.probe_topk`) and the IVF cell
+assignment (`_assign_arrow`).
 
 Scale notes: d2 shuffles on band keys only (candidate sets), d5 on
-LSH buckets; d1 is one hash-agg; d3 broadcasts the (small) query set
+LSH buckets; d1 is one hash-agg; d3 broadcasts the (small) probe set
 against the corpus — the classic brute-force layout; at 100 TB you
 shard candidates and keep the same plan. d4 is quadratic by design
 (the oracle-grade baseline) and stays language-blocked.
@@ -45,6 +48,7 @@ from ..functions.urls import url_hash
 from ..tables import load_table
 from .registry import query
 from .relcache import cached_relation, mv_step
+from ..vecops import collect_vectors, decode, fold_cos, fold_norm, probe_topk
 from .synth import K_SQL, k_col, normalized_url_sql, url_col
 
 N_MINHASH = 12
@@ -229,58 +233,35 @@ def _assign_arrow(
     norm_name: str | None = None,
     parallelize: bool = False,
 ) -> DataFrame:
-    """mapInArrow argmax-cosine cell assignment (r14, guide §4.2):
-    the vectorized twin of `vecs x broadcast(codebook) -> per-row
-    cosine fold -> groupBy(vec_id).max_by(...)` shared by the whole
-    IVF family (_ivf_assigned / _d49_assign / _trained_assigned).
+    """mapInArrow argmax-cosine cell assignment, shared by the IVF
+    family (_ivf_assigned / _d49_assign / _trained_assigned): the
+    vectorized twin of `vecs x broadcast(codebook) -> per-row cosine
+    fold -> groupBy(vec_id).max_by(...)`.
 
-    Why: the declarative shape materializes the n x k fan-out as JVM
-    rows — each carrying the FULL vector array — and evaluates k
-    interpreted `aggregate` folds of D terms per vector, then pays a
-    vec_id-keyed exchange to fold the fan back down. The kernel holds
-    the k-row codebook once per task (collected driver-side — k is
-    the plan-bounded cell count, <= 65536 under the d49 sqrt law, the
-    same fixed-size-collect class as D3_PROBES) and computes every
-    cosine in one dimension-at-a-time numpy sweep per batch, emitting
-    exactly one output row per input row: the n x k relation is never
-    materialized and NO exchange remains (argmax is task-local).
-
-    Bit-exactness contract (the d3-kernel discipline): `acc += v[i] *
-    c[i]` one dimension at a time in float64 from 0.0 — the exact
-    IEEE operation sequence of `_dot_spark`'s left fold; cosine then
-    divides by (norm_v * norm_c) in that order; PQ sub-distances fold
-    `(v[i]-c[i])*(v[i]-c[i])` per dimension exactly like
-    `_SQL2_SPARK_SQL`. Tie-breaks: centroids are sorted by cid ascending
-    and numpy arg{max,min} return the FIRST extremum, reproducing
+    The k-row codebook is collected once (k is the plan-bounded cell
+    count) and broadcast; each Arrow batch is scored against it with
+    `vecops.fold_cos`, so one output row leaves per input row, the
+    n x k relation is never materialized and no exchange remains.
+    Tie-breaks: centroids are sorted by cid ascending and numpy
+    arg{max,min} return the FIRST extremum, reproducing
     max_by(cid, struct(cos, -cid)) / min_by(cid, struct(dist, cid)).
-    Parity with the declarative forms is pinned by
-    tests/test_r14_opt.py.
+    PQ sub-distances fold `(v[i]-c[i])*(v[i]-c[i])` per dimension in
+    `_SQL2_SPARK_SQL`'s order. Parity with the declarative forms is
+    pinned by tests/test_r14_opt.py.
 
     ``parallelize`` adds the d2_sigs guarded repartition for MV
     builds whose source arrives in fewer splits than cores (no-op at
     scale); query paths leave it off to keep their plans exchange-
     free.
 
-    Invariants (ADVICE r14 #2/#4): every vector and centroid must
-    have a NONZERO norm — Spark's Divide yields NULL on a zero
-    divisor while numpy yields NaN and argmax would then pick the NaN
-    column, silently diverging from the declarative max_by; the
-    kernel raises loudly instead (guarded below). And this function
-    is EAGER at plan-construction time: the k-row codebook collect
-    runs a Spark job when the DataFrame is BUILT, not when it is
-    first evaluated — callers that construct plans speculatively pay
-    that job up front."""
+    A null vector or centroid, or a zero norm, raises ValueError
+    (`vecops`). The codebook collect is EAGER: it runs a Spark job
+    when the DataFrame is built, not when it is first evaluated."""
     import numpy as np
     import pyarrow as pa
 
-    cb_rows = (
-        codebook.select(cid_col, cvec_col).orderBy(cid_col).collect()
-    )
-    if any(r[1] is None for r in cb_rows):
-        raise ValueError(f"_assign_arrow: null centroid in column {cvec_col!r}")
-    cids_l = [r[0] for r in cb_rows]
-    cmat_l = [list(r[1]) for r in cb_rows]
-    bc = spark.sparkContext.broadcast((cids_l, cmat_l))
+    cb = collect_vectors(codebook.select(cid_col, cvec_col).orderBy(cid_col), cvec_col)
+    bc = spark.sparkContext.broadcast((cb[cid_col].astype(np.int64), cb[cvec_col]))
 
     base = vecs.select(*passthrough)
     if parallelize:
@@ -298,55 +279,14 @@ def _assign_arrow(
     schema = ", ".join(out_fields)
 
     def gen(batches):
-        cids_l, cmat_l = bc.value
-        cids = np.asarray(cids_l, dtype=np.int64)
-        C = np.asarray(cmat_l, dtype=np.float64)  # (k, D), cid-ascending
-        k, D = C.shape
-        # centroid dot fold: ((0 + c0*c0) + c1*c1) + ... per centroid
-        cacc = np.zeros(k)
-        for i in range(D):
-            cacc += C[:, i] * C[:, i]
-        cn = np.sqrt(cacc)
-        if k and not cn.all():
-            raise ValueError(
-                "_assign_arrow: zero-norm centroid — cosine undefined "
-                "(declarative Divide would yield NULL, numpy NaN)"
-            )
+        cids, C = bc.value  # cid-ascending
+        cn = fold_norm(C)
         for b in batches:
             if b.num_rows == 0:
                 continue
-            # r15 (guide §4.2, VERDICT r14 #6): decode the list<double>
-            # column through the Arrow buffers — flatten() concatenates
-            # the per-row lists (honoring offsets), np.asarray is a
-            # zero-copy float64 view, reshape restores (n, D). Same
-            # float64 bit patterns as the old to_pylist round trip
-            # (parity pinned by tests/test_r14_opt.py), without
-            # materializing n Python lists per batch. A null vector (or
-            # coordinate) would be dropped by flatten() and surface as an
-            # opaque reshape error (or a NaN argmax), so it raises here.
-            vecs_col = b.column(vec_col)
-            flat = vecs_col.flatten()
-            if vecs_col.null_count or flat.null_count:
-                raise ValueError(
-                    f"_assign_arrow: null vector or coordinate in column "
-                    f"{vec_col!r} — cosine undefined (declarative Divide "
-                    "would yield NULL)"
-                )
-            V = np.asarray(flat, dtype=np.float64).reshape(b.num_rows, -1)  # (n, D)
-            n_rows = V.shape[0]
-            acc = np.zeros((n_rows, k))
-            for i in range(D):
-                acc += V[:, i : i + 1] * C[:, i]
-            vacc = np.zeros(n_rows)
-            for i in range(D):
-                vacc += V[:, i] * V[:, i]
-            vn = np.sqrt(vacc)
-            if n_rows and not vn.all():
-                raise ValueError(
-                    "_assign_arrow: zero-norm vector — cosine undefined "
-                    "(declarative Divide would yield NULL, numpy NaN)"
-                )
-            cos = acc / (vn[:, None] * cn[None, :])
+            V = decode(b.column(vec_col), vec_col)
+            vn = fold_norm(V)
+            cos = fold_cos(V, vn, C, cn)
             cols = [b.column(c) for c in passthrough]
             names = list(passthrough)
             cols.append(pa.array(cids[np.argmax(cos, axis=1)], type=pa.int64()))
@@ -354,7 +294,7 @@ def _assign_arrow(
             if pq:
                 for s in range(1, PQ_M + 1):
                     lo = (s - 1) * PQ_SUBDIM
-                    dacc = np.zeros((n_rows, k))
+                    dacc = np.zeros((len(V), len(C)))
                     for i in range(lo, lo + PQ_SUBDIM):
                         d = V[:, i : i + 1] - C[:, i]
                         dacc += d * d
@@ -917,17 +857,8 @@ def _normed_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------- d3
-# Bounded-probe contract (VERDICT r8 #5): the probe set is a FIXED
-# COUNT selected by deterministic md5 rank + LIMIT, not a corpus
-# fraction. The old `vec_id % 50` made the driver-side probe collect
-# (and the n x probes kernel cost) grow linearly with the corpus —
-# effectively quadratic total work — with the bound living in prose
-# only. A LIMIT puts the bound in the plan: the collect is exactly
-# D3_PROBES rows at any corpus size, the selection is engine-exact
-# (md5 of the decimal vec_id string ranks identically in Spark and
-# DuckDB), and scanning for the top-K is TakeOrderedAndProject
-# (per-partition heads), never a global sort.
-D3_PROBES = 40
+# d3 and d36 search the ANN family's bounded probe set (`_ivf_probe_set`).
+D3_PROBES = IVF_PROBES
 
 
 @query(
@@ -954,139 +885,59 @@ D3_PROBES = 40
 )
 def d3_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k similarity search (the ANN correctness
-    baseline), executed as a vectorized Arrow-batched kernel (r8): the
-    probe set broadcasts to every candidate partition, each partition
-    scores its candidates against all probes in a numpy kernel and
-    emits only its LOCAL top-5 per probe, and a final window merges
-    the per-partition heads. Top-5 of a union of local top-5s is the
-    global top-5 (candidate_id is unique, so (cosine desc, id) has no
-    cross-partition ties to lose), so the pair relation — O(probes x
-    corpus) — is never materialized, shuffled, or even emitted from
-    the scan stage: each Arrow batch contributes at most 5 x probes
-    rows. That is the shard-local top-k + merge a 100 TB brute-force
-    pass needs, and the kernel is the fast path: the declarative
-    zip_with/aggregate fold evaluates interpreted per element (~10 us
-    per pair at dim=64), while the kernel does one fused multiply-add
-    sweep per dimension across the whole batch (measured 1.4x end-to-
-    end at sf0.1 where per-query overhead dominates; the per-pair gap
-    is ~100x and grows with corpus size). An expression-unrolled
-    64-term sum was A/B'd too and is 2.3x SLOWER than the fold —
-    codegen handles neither giant trees nor the fold well; numbers in
-    BENCH_NOTES r8.
+    baseline) through the shared probe kernel (`vecops.probe_topk`):
+    the bounded probe set (md5-rank + LIMIT, D3_PROBES rows at any
+    corpus size) is collected and broadcast, every Arrow batch of the
+    stored normed MV emits only its local top-5 per probe, and one
+    window merges the per-batch heads. Cosines use the stored
+    `d3_normed` norms (one fold per vector, not per pair) and are
+    pinned bit-identical to `_d3_fold_reference`, the declarative
+    formulation, by tests/test_r8_ops.py. The probe collect runs a
+    Spark job at plan-construction time."""
+    return (
+        _normed_probe_search(spark, sf_dir, 5, by_label=False)
+        .where("rank <= 5")
+        .selectExpr(
+            "query_id", "candidate_id", "label", "cosine", "CAST(rank AS INT) AS rank"
+        )
+    )
 
-    Bit-exactness contract (the driver hash-compares raw doubles): the
-    kernel accumulates `acc += q[i] * c[i]` one dimension at a time in
-    float64, starting from 0.0 — the exact IEEE operation sequence of
-    the oracle's list_reduce left fold and of `_d3_fold_reference`,
-    which stays in-tree as the declarative formulation and is pinned
-    bit-identical to this kernel by tests/test_r8_ops.py. The
-    per-vector L2 norm still comes from the stored `d3_normed` MV
-    (one fold per VECTOR, not per pair).
 
-    The probe set (md5-rank + LIMIT, D3_PROBES rows — the bound is in
-    the plan, VERDICT r8 #5) is collected to the driver and
-    rebroadcast — the same data movement the previous BroadcastHash
-    formulation performed inside the JVM; the collect is a fixed
-    D3_PROBES rows at ANY corpus size, and a larger configured probe set
-    blocks through PROBE_BLOCK rows at a time so the kernel's
-    accumulator stays O(block x batch)."""
-    import numpy as np
-    import pandas as pd
-
+def _normed_probe_search(
+    spark: SparkSession, sf_dir: str, k: int, by_label: bool
+) -> DataFrame:
+    """The probe kernel over the normed MV, with the candidate's label
+    kept: one leg (d3), or with ``by_label`` leg 0 = the candidates of
+    another label and leg 1 = those of the probe's own label (d36).
+    `rank` numbers each probe's rows by (leg, cosine desc,
+    candidate_id), so leg 0's ranks start at 1; a window keyed by
+    query_id alone lets d36's best_pos window share its exchange."""
     normed = _normed_embeddings(spark, sf_dir)
-    qpd = (
-        normed.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(D3_PROBES)
-        .select("vec_id", "embedding", "norm")
-        .toPandas()
+    P = collect_vectors(
+        _ivf_probe_set(normed).selectExpr(
+            "vec_id AS query_id", "embedding AS qv", "norm AS qnorm", "label"
+        ),
+        "qv",
     )
-    assert len(qpd) <= D3_PROBES  # the plan-enforced probe bound
-    qids = qpd["vec_id"].to_numpy()
-    Q = (
-        np.stack(qpd["embedding"].to_numpy()).astype(np.float64)
-        if len(qpd)
-        else np.zeros((0, 0))
+    legs = (
+        (("label", P["label"], False), ("label", P["label"], True))
+        if by_label
+        else (None,)
     )
-    qn = qpd["norm"].to_numpy()
-    bq = spark.sparkContext.broadcast((qids, Q, qn))
-    PROBE_BLOCK = 1024
-    K = 5
-
-    def score(batches):
-        qids, Q, qn = bq.value
-        nq = len(qids)
-        for pdf in batches:
-            if len(pdf) == 0 or nq == 0:
-                continue
-            # sort the batch by candidate id so a STABLE descending
-            # argsort on cosine alone realizes the (cosine desc, id)
-            # order — the vectorized form of the per-probe lexsort
-            order = np.argsort(pdf["vec_id"].to_numpy(), kind="stable")
-            cids = pdf["vec_id"].to_numpy()[order]
-            C = np.stack(pdf["embedding"].to_numpy()[order]).astype(np.float64)
-            cn = pdf["norm"].to_numpy()[order]
-            labels = pdf["label"].to_numpy()[order]
-            out = []
-            tmp = None
-            for lo in range(0, nq, PROBE_BLOCK):
-                Qb, qb_ids, qb_n = (
-                    Q[lo : lo + PROBE_BLOCK],
-                    qids[lo : lo + PROBE_BLOCK],
-                    qn[lo : lo + PROBE_BLOCK],
-                )
-                # dimension-at-a-time FMA sweep: elementwise float64
-                # adds in the same order as the left fold -> the
-                # cosines are bit-identical to the declarative form
-                # (in-place out= ops change allocation, not values)
-                acc = np.zeros((len(qb_ids), len(cids)))
-                if tmp is None or tmp.shape != acc.shape:
-                    tmp = np.empty_like(acc)
-                for i in range(Qb.shape[1]):
-                    np.multiply(Qb[:, i][:, None], C[:, i][None, :], out=tmp)
-                    np.add(acc, tmp, out=acc)
-                cos = acc / (qb_n[:, None] * cn[None, :])
-                # exclude self-pairs by sinking them below every real
-                # cosine, then select K+1 and drop the sunk entry if it
-                # surfaced (at most one per probe)
-                cos[cids[None, :] == qb_ids[:, None]] = -np.inf
-                kk = min(K + 1, cos.shape[1])
-                top = np.argsort(-cos, axis=1, kind="stable")[:, :kk]
-                rows = np.repeat(np.arange(len(qb_ids)), kk)
-                cols = top.ravel()
-                keep = np.isfinite(cos[rows, cols])
-                rows, cols = rows[keep], cols[keep]
-                # trim each probe to K survivors (stable order kept)
-                rank_in_probe = np.concatenate(
-                    [np.arange(c) for c in np.bincount(rows, minlength=len(qb_ids))]
-                ) if len(rows) else np.array([], dtype=np.int64)
-                keep2 = rank_in_probe < K
-                rows, cols = rows[keep2], cols[keep2]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qb_ids[rows].astype(np.int64),
-                            "candidate_id": cids[cols].astype(np.int64),
-                            "label": labels[cols],
-                            "cosine": cos[rows, cols],
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    label_t = normed.schema["label"].dataType.simpleString()
-    local = normed.mapInPandas(
-        score,
-        schema=f"query_id bigint, candidate_id bigint, label {label_t}, cosine double",
+    local = probe_topk(
+        spark,
+        (P["query_id"], P["qv"], P["qnorm"]),
+        normed.selectExpr(
+            "vec_id AS candidate_id", "embedding AS cv", "norm AS cnorm", "label"
+        ),
+        k,
+        legs,
+        keep=("label",),
     )
     w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("candidate_id")
+        F.col("leg"), F.col("cosine").desc(), F.col("candidate_id")
     )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= K)
-        .withColumn("rank", F.col("rank").cast("int"))
-    )
+    return local.withColumn("rank", F.row_number().over(w))
 
 
 def _d3_fold_reference(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4093,148 +3944,33 @@ HARDNEG_TOPK = 3
 def d36_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k cross-label neighbors per probe, with the positive margin.
 
-    Spark shape (r14: the d3 local-top-k kernel seam, previously named
-    in this docstring as the scale plan and now the plan itself): the
-    bounded probe set (md5-rank + LIMIT, D3_PROBES rows at any corpus
-    size) is collected and broadcast; each Arrow batch of the stored
-    normed MV scores its candidates against all probes in one
-    dimension-at-a-time float64 sweep (`acc += q[i]*c[i]` — exactly
-    `_dot_spark`'s left fold, then / (qnorm * cnorm), so cosines are
-    bit-identical to the declarative join) and emits only (a) its
-    LOCAL top-HARDNEG_TOPK cross-label rows per probe and (b) one
-    local best same-label cosine per probe. Top-k of a union of local
-    top-ks is the global top-k (candidate_id unique -> no ties to
-    lose) and MAX is associative, so the probes x corpus scored
-    relation is never materialized, shuffled, or windowed — the
-    per-probe rank and the best-pos re-aggregation run over
-    O(probes x k x batches) rows. The margin is a difference of two
-    fold-derived doubles — the identical IEEE expression tree on both
-    engines, so raw doubles hash-match. Self-pairs: excluded from the
-    positive side explicitly; the negative side excludes them by
-    label (a vector shares its own label). Probes with no same-label
-    candidate anywhere emit no best-pos row and take a NULL margin
-    (max over an empty set), the oracle's semantics.
+    One pass of the shared probe kernel (`_normed_probe_search`) over
+    the stored normed MV: leg 0 holds each batch's local top-k
+    candidates of another label, leg 1 those of the probe's own label
+    (self excluded). One window over a query_id-keyed exchange then
+    ranks leg 0 and takes best_pos as the max cosine of leg 1, so the
+    probes x corpus scored relation is never materialized and the
+    kernel runs once. Probes with no same-label candidate take a NULL
+    best_pos and margin (max over an empty set), the oracle's
+    semantics. The margin is a difference of two fold-derived doubles,
+    the same IEEE expression tree on both engines.
 
-    Invariants (ADVICE r14 #3/#4): the kernel's label-match test
-    (labels == qlabels) treats NULL labels as EQUAL (None == None),
-    unlike the old declarative cand_label == query_label which
-    filtered NULL-label pairs from both branches — safe only while
-    the embeddings table guarantees non-null int labels (it does; the
-    loader schema pins it). And the function is EAGER: the bounded
-    probe collect runs a Spark job at plan-construction time."""
-    import numpy as np
-    import pandas as pd
-
-    normed = _normed_embeddings(spark, sf_dir)
-    qpd = (
-        normed.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(D3_PROBES)
-        .select("vec_id", "label", "embedding", "norm")
-        .toPandas()
-    )
-    assert len(qpd) <= D3_PROBES  # the plan-enforced probe bound
-    bq = spark.sparkContext.broadcast(
-        (
-            qpd["vec_id"].to_numpy(),
-            qpd["label"].to_numpy(),
-            np.stack(qpd["embedding"].to_numpy()).astype(np.float64)
-            if len(qpd)
-            else np.zeros((0, 0)),
-            qpd["norm"].to_numpy(),
-        )
-    )
-    K = HARDNEG_TOPK
-
-    def mine(batches):
-        qids, qlabels, Q, qn = bq.value
-        nq = len(qids)
-        for pdf in batches:
-            if len(pdf) == 0 or nq == 0:
-                continue
-            # candidate-id-sorted batch: a STABLE descending argsort on
-            # cosine alone then realizes (cosine desc, candidate_id)
-            order = np.argsort(pdf["vec_id"].to_numpy(), kind="stable")
-            cids = pdf["vec_id"].to_numpy()[order]
-            C = np.stack(pdf["embedding"].to_numpy()[order]).astype(np.float64)
-            cn = pdf["norm"].to_numpy()[order]
-            labels = pdf["label"].to_numpy()[order]
-            acc = np.zeros((nq, len(cids)))
-            for i in range(Q.shape[1]):
-                acc += Q[:, i][:, None] * C[:, i][None, :]
-            cos = acc / (qn[:, None] * cn[None, :])
-            same = labels[None, :] == qlabels[:, None]
-            selfp = cids[None, :] == qids[:, None]
-            out = []
-            # (a) local best same-label cosine per probe (self excluded)
-            pos = np.where(same & ~selfp, cos, -np.inf)
-            pbest = pos.max(axis=1)
-            has = np.isfinite(pbest)
-            if has.any():
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qids[has].astype(np.int64),
-                            "candidate_id": np.zeros(int(has.sum()), dtype=np.int64),
-                            "cand_label": np.zeros(int(has.sum()), dtype=np.int32),
-                            "cosine": pbest[has],
-                            "is_pos": True,
-                        }
-                    )
-                )
-            # (b) local top-K cross-label rows per probe
-            neg = np.where(~same, cos, -np.inf)
-            kk = min(K, neg.shape[1])
-            top = np.argsort(-neg, axis=1, kind="stable")[:, :kk]
-            rows = np.repeat(np.arange(nq), kk)
-            cols = top.ravel()
-            keep = np.isfinite(neg[rows, cols])
-            rows, cols = rows[keep], cols[keep]
-            if len(rows):
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qids[rows].astype(np.int64),
-                            "candidate_id": cids[cols].astype(np.int64),
-                            "cand_label": labels[cols],
-                            "cosine": neg[rows, cols],
-                            "is_pos": False,
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    mined = normed.select("vec_id", "label", "embedding", "norm").mapInPandas(
-        mine,
-        schema="query_id bigint, candidate_id bigint, cand_label int, "
-        "cosine double, is_pos boolean",
-    )
-    # r15 (guide §2.4, VERDICT r14 #5 family): best_pos used to be a
-    # separate groupBy + broadcast-join leg, which re-evaluated the
-    # mining kernel (and its corpus scan) a second time — the two
-    # consumers hung off DIFFERENT exchanges (agg by query_id vs the
-    # rank window), so ReuseExchange never fired. Both are now windows
-    # over ONE query_id-keyed exchange: best_pos is max(cosine of the
-    # is_pos rows) over the whole partition, and the negative rank
-    # orders is_pos ASC first so the negatives' row_numbers (1..n_neg)
-    # are identical to the old negatives-only window. Probes with no
-    # same-label candidate get a NULL best_pos (max over an empty
-    # when() set), preserving the old left join's NULL margin.
-    wq = Window.partitionBy("query_id")
-    wrank = Window.partitionBy("query_id").orderBy(
-        F.col("is_pos").asc(), F.col("cosine").desc(), F.col("candidate_id")
-    )
+    Labels match with numpy `==`, so the kernel relies on the loader's
+    non-null int labels. The probe collect runs a Spark job at
+    plan-construction time."""
+    mined = _normed_probe_search(spark, sf_dir, HARDNEG_TOPK, by_label=True)
     return (
         mined.withColumn(
             "best_pos",
-            F.max(F.when(F.col("is_pos"), F.col("cosine"))).over(wq),
+            F.max(F.when(F.col("leg") == 1, F.col("cosine"))).over(
+                Window.partitionBy("query_id")
+            ),
         )
-        .withColumn("rank", F.row_number().over(wrank))
-        .where((~F.col("is_pos")) & (F.col("rank") <= HARDNEG_TOPK))
+        .where((F.col("leg") == 0) & (F.col("rank") <= HARDNEG_TOPK))
         .select(
             "query_id",
             "candidate_id",
-            F.col("cand_label").alias("neg_label"),
+            F.col("label").alias("neg_label"),
             "cosine",
             (F.col("best_pos") - F.col("cosine")).alias("margin"),
             F.col("rank").cast("int").alias("rank"),
@@ -7893,16 +7629,6 @@ def d65_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
 D66_NPROBES = (1, 2, 4)
 
 
-def _fold_dot_py(a, b) -> float:
-    """Sequential left-fold dot product — the same IEEE float64 op
-    order as `_dot_spark` / the oracle's list_reduce, so driver-side
-    norms are bit-identical to the engine-side ones."""
-    acc = 0.0
-    for x, y in zip(a, b):
-        acc += float(x) * float(y)
-    return acc
-
-
 @query(
     "d66_nprobe_sweep",
     oracle=f"""
@@ -7971,178 +7697,48 @@ def d66_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid-nearest cells exactly and the top-3 is scored against
     the global exact top-3 ground truth.
 
-    Spark shape — ONE Arrow-kernel pass over the index MV computes
-    BOTH legs (d3's brute-force discipline: the probes x corpus pair
-    relation is never materialized or shuffled; each Arrow batch
-    emits at most (4 + maxnp x 3) rows per probe):
-      1. the cell ranking is a probes x broadcast k-row codebook
-         window (IVF_PROBES x k rows), collected as the bounded
-         routing table (<= probes x maxnp rows, the sanctioned
-         fixed-size collect class) and broadcast into the kernel;
-      2. the kernel scores each batch against all probes with the
-         dimension-at-a-time float64 FMA sweep — bit-identical to the
-         oracle's list_reduce left fold (the d3 kernel contract) —
-         and keeps shard-local top-4 global candidates (cell = -1
-         sentinel) plus shard-local top-3 within each PROBED cell;
-      3. tiny windows merge shard-local tops into the global exact
-         top-3 truth and the per-(query, cell) top-3; the nprobe
-         sweep is a 3-row explode whose top-3-of-union merge runs on
-         <= maxnp x 3 rows per query. The 3-row result carries the
-         truth count via a 1-row anchor.
-    First formulation (declarative fold joins + full windows) was
-    measured 5.6x at 100x vectors / 2.8 s at sf0.1 and REJECTED; the
-    kernel form is d3's measured ~1.7x class (BENCH_NOTES r11).
+    Spark shape — ONE pass of the shared probe kernel
+    (`vecops.probe_topk`) over the index MV computes both legs:
+      1. the bounded probes (IVF_PROBES rows) and the k-row codebook
+         are collected concurrently; each probe's cells are ranked
+         driver-side by `vecops.fold_cos` (ties to the smaller cid),
+         the oracle's list_reduce cosine ordering;
+      2. kernel leg 0 is the global truth and leg r the probe's r-th
+         routed cell, each keeping its batch-local top-3;
+      3. one window per (query_id, leg) merges the local tops, and
+         one (query_id, candidate_id) aggregate folds the legs: `gt`
+         marks leg-0 rows and `crank` is the candidate's routed leg
+         (a candidate sits in one cell). The nprobe sweep is a 3-row
+         explode whose top-3 merge runs on <= maxnp x 3 rows per
+         query; true_k rides along as a global-window sum, so the
+         kernel has one consumer chain and runs once.
     All counts integer; recall_ppm is integer div."""
-    import numpy as np
-    import pandas as pd
-
-    maxnp = max(D66_NPROBES)
-    cm = _trained_centroids(spark, sf_dir)
-    assigned = _trained_assigned(spark, sf_dir)
-    probes = _ivf_probes(assigned)
-    # bounded collects: IVF_PROBES probe rows + the k-row codebook at
-    # ANY corpus size (the probe bound lives in the plan as a LIMIT;
-    # the codebook is the fixed-k trained MV). The cell ranking runs
-    # driver-side on the probes x k frame with the SAME dimension-at-
-    # a-time float64 fold as the kernel below, so it is bit-identical
-    # to the oracle's list_reduce cosine ordering — one Spark job
-    # fewer than a window formulation over the same 40 x k rows.
-    # r15 (guide §2.6): the two independent collect jobs run
-    # concurrently — Spark's scheduler interleaves them, halving the
-    # eager plan-construction latency the bench pays per run.
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        _qf = _pool.submit(probes.toPandas)
-        _cf = _pool.submit(cm.collect)
-        qpd = _qf.result()
-        cmr = _cf.result()
-    qids = qpd["query_id"].to_numpy().astype(np.int64)
-    Q = (
-        np.stack(qpd["qe"].to_numpy()).astype(np.float64)
-        if len(qpd)
-        else np.zeros((0, 0))
-    )
-    qn = qpd["qnorm"].to_numpy()
-    cm_ids = np.array([int(r["cid"]) for r in cmr], dtype=np.int64)
-    CE = (
-        np.stack([np.array(r["ce"], dtype=np.float64) for r in cmr])
-        if cmr
-        else np.zeros((0, 0))
-    )
-    route = {}
-    if len(qids) and len(cm_ids):
-        cen = np.sqrt(
-            np.array(
-                [_fold_dot_py(CE[j], CE[j]) for j in range(len(cm_ids))]
-            )
-        )
-        acc0 = np.zeros((len(qids), len(cm_ids)))
-        tmp0 = np.empty_like(acc0)
-        for i in range(Q.shape[1]):
-            np.multiply(Q[:, i][:, None], CE[:, i][None, :], out=tmp0)
-            np.add(acc0, tmp0, out=acc0)
-        ccos = acc0 / (qn[:, None] * cen[None, :])
-        corder = np.argsort(cm_ids, kind="stable")
-        for qi in range(len(qids)):
-            row = ccos[qi, corder]
-            top = np.argsort(-row, kind="stable")[:maxnp]
-            route[int(qids[qi])] = [
-                (rank + 1, int(cm_ids[corder[t]])) for rank, t in enumerate(top)
-            ]
-    bq = spark.sparkContext.broadcast((qids, Q, qn, route))
-    K = 3
+    import numpy as np
 
-    def score(batches):
-        qids, Q, qn, route = bq.value
-        nq = len(qids)
-        for pdf in batches:
-            if len(pdf) == 0 or nq == 0:
-                continue
-            order = np.argsort(pdf["candidate_id"].to_numpy(), kind="stable")
-            cids = pdf["candidate_id"].to_numpy()[order].astype(np.int64)
-            C = np.stack(pdf["cv"].to_numpy()[order]).astype(np.float64)
-            cn = pdf["cnorm"].to_numpy()[order]
-            cells = pdf["cell"].to_numpy()[order].astype(np.int64)
-            # dimension-at-a-time FMA sweep (d3's bit-exactness
-            # contract: same IEEE op order as the left fold)
-            acc = np.zeros((nq, len(cids)))
-            tmp = np.empty_like(acc)
-            for i in range(Q.shape[1]):
-                np.multiply(Q[:, i][:, None], C[:, i][None, :], out=tmp)
-                np.add(acc, tmp, out=acc)
-            cos = acc / (qn[:, None] * cn[None, :])
-            cos[cids[None, :] == qids[:, None]] = -np.inf
-            out_q, out_cell, out_rk, out_cand, out_cos = [], [], [], [], []
-
-            def emit(qi, mask_cols, cell_val, crank_val, k):
-                row = cos[qi, mask_cols]
-                kk = min(k, len(mask_cols))
-                top = np.argsort(-row, kind="stable")[:kk]
-                for t in top:
-                    c = row[t]
-                    if not np.isfinite(c):
-                        continue
-                    out_q.append(qids[qi])
-                    out_cell.append(cell_val)
-                    out_rk.append(crank_val)
-                    out_cand.append(cids[mask_cols[t]])
-                    out_cos.append(c)
-
-            all_cols = np.arange(len(cids))
-            for qi in range(nq):
-                # global leg: top-(K+1) so a sunk self can't displace
-                emit(qi, all_cols, -1, 0, K + 1)
-                for crank, cid in route.get(int(qids[qi]), ()):
-                    emit(qi, all_cols[cells == cid], cid, crank, K + 1)
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.array(out_q, dtype=np.int64),
-                        "cell": np.array(out_cell, dtype=np.int64),
-                        "crank": np.array(out_rk, dtype=np.int32),
-                        "candidate_id": np.array(out_cand, dtype=np.int64),
-                        "cosine": np.array(out_cos, dtype=np.float64),
-                    }
-                )
-
-    local = assigned.select(
-        F.col("vec_id").alias("candidate_id"),
-        F.col("cell"),
-        F.col("v").alias("cv"),
-        F.col("vnorm").alias("cnorm"),
-    ).mapInPandas(
-        score,
-        schema=(
-            "query_id bigint, cell bigint, crank int, "
-            "candidate_id bigint, cosine double"
+    cm = _trained_centroids(spark, sf_dir)
+    assigned = _trained_assigned(spark, sf_dir)
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        pf = pool.submit(collect_vectors, _ivf_probes(assigned), "qe")
+        cf = pool.submit(collect_vectors, cm, "ce")
+        P, cb = pf.result(), cf.result()
+    route = np.zeros((len(P["query_id"]), 0), dtype=np.int64)
+    if len(route) and len(cb["cid"]):
+        corder = np.argsort(cb["cid"], kind="stable")
+        cids, CE = cb["cid"][corder], cb["ce"][corder]
+        ccos = fold_cos(P["qe"], P["qnorm"], CE, fold_norm(CE))
+        route = cids[np.argsort(-ccos, axis=1, kind="stable")[:, : max(D66_NPROBES)]]
+    local = probe_topk(
+        spark,
+        (P["query_id"], P["qe"], P["qnorm"]),
+        assigned.selectExpr(
+            "vec_id AS candidate_id", "v AS cv", "vnorm AS cnorm", "cell"
         ),
+        3,
+        (None,) + tuple(("cell", route[:, r], True) for r in range(route.shape[1])),
     )
-    # r15 (guide §2.4, VERDICT r14 #2): the old wiring hung THREE
-    # consumers (the truth top-3, the per-cell top-3, the truth count)
-    # off the kernel through DIFFERENT exchanges — and even with one
-    # shared window, per-leg `cell` filters get pushed below the
-    # Window/Exchange, recreating distinct subtrees — so the corpus
-    # scan + scoring kernel executed once PER CONSUMER. New shape:
-    # ONE window partitioned by (query_id, cell) ranks both legs (the
-    # global-truth rows all carry the cell = -1 sentinel, so their
-    # within-(query_id, -1) rank IS their within-query rank), then ONE
-    # filter-free (query_id, candidate_id)-grain aggregate folds the
-    # legs per pair: a candidate belongs to exactly one cell, so its
-    # probed-cell crank is MIN(crank of the cell rows) and its
-    # ground-truth membership is a boolean MAX over the sentinel rows;
-    # cosine is the identical kernel double on every leg, so MAX
-    # passes it through bit-exactly. The sweep, the hit counts, and
-    # true_k all derive from that one relation. true_k rides ALONG as
-    # a global-window sum over the tiny candidate relation (bounded by
-    # probes x (maxnp + 1) x 3 rows — the sanctioned tiny single-
-    # partition window class) instead of being a second aggregate
-    # consumer: a separate agg prunes different columns, which makes
-    # the exchanges non-identical and defeats ReuseExchange (measured:
-    # the kernel still ran twice that way). With ONE consumer chain
-    # the scoring kernel runs ONCE, and the old broadcast truth-join
-    # disappears (the gt flag rides the swept rows).
-    wc = Window.partitionBy("query_id", "cell").orderBy(
+    wc = Window.partitionBy("query_id", "leg").orderBy(
         F.col("cosine").desc(), F.col("candidate_id")
     )
     ranked = (
@@ -8150,8 +7746,8 @@ def d66_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rn") <= 3)
     )
     cand = ranked.groupBy("query_id", "candidate_id").agg(
-        F.max(F.col("cell") == -1).alias("gt"),
-        F.min(F.when(F.col("cell") >= 0, F.col("crank"))).alias("crank"),
+        F.max(F.col("leg") == 0).alias("gt"),
+        F.min(F.when(F.col("leg") > 0, F.col("leg"))).alias("crank"),
         F.max("cosine").alias("cosine"),
     ).withColumn(
         "true_k",

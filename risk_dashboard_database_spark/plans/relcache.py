@@ -367,14 +367,23 @@ def cached_relation(key: str, sf_dir: str, build: Callable[[], DataFrame]) -> Da
     A miss holds the (key, fingerprint) lock through build and publish
     and re-checks `_SUCCESS` once it holds it, so threads of one
     process that miss together build once; the others read what the
-    first published. A store that cannot be written is redirected to
-    a private temp directory (with a warning) before the build, so the
-    result is a parquet scan in every case."""
+    first published. A memo hit is served only while its `_SUCCESS`
+    marker exists: one that `_prune` (or another process) deleted is
+    rebuilt, never returned as a scan of deleted files. A store that
+    cannot be written is redirected to a private temp directory (with a
+    warning) before the build, so the result is a parquet scan in every
+    case."""
     fp = _fingerprint(sf_dir)
     hit = _CACHE.get((key, fp))
     if hit is not None:
-        _touch(os.path.join(MV_ROOT, key, fp))
-        return hit
+        path = os.path.join(MV_ROOT, key, fp)
+        _touch(path)
+        if os.path.exists(os.path.join(path, "_SUCCESS")):
+            return hit
+        # pruned since it was read: forget the scan and Spark's listing
+        # of its files, and rebuild
+        _CACHE.pop((key, fp), None)
+        hit.sparkSession.catalog.refreshByPath(path)
     with _LOCK:
         lock = _BUILD_LOCKS.setdefault((key, fp), threading.Lock())
     with lock:

@@ -266,20 +266,18 @@ def test_ivf_assigned_kernel_matches_declarative_stub(spark, tmp_path, monkeypat
         relcache.clear()
 
 
-def test_d36_mining_kernel_matches_declarative(spark):
-    """d36's local-top-k mining kernel must reproduce the declarative
-    probes x corpus join + window exactly — cosines, margins (NULL
-    when a probe has no same-label candidate), ranks, tie-breaks."""
+def _d36_declarative(spark, sf_dir):
+    """d36 as the declarative probes x corpus join + window: the
+    reference its mining kernel must reproduce."""
     from pyspark.sql import Window
 
-    from risk_dashboard_database_spark.plans import dedup
     from risk_dashboard_database_spark.plans.dedup import (
         D3_PROBES,
         HARDNEG_TOPK,
         _normed_embeddings,
     )
 
-    normed = _normed_embeddings(spark, SF_DIR)
+    normed = _normed_embeddings(spark, sf_dir)
     probes = F.broadcast(
         normed.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
         .limit(D3_PROBES)
@@ -318,7 +316,7 @@ def test_d36_mining_kernel_matches_declarative(spark):
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= HARDNEG_TOPK)
     )
-    decl = negs.join(F.broadcast(best_pos), "query_id", "left").select(
+    return negs.join(F.broadcast(best_pos), "query_id", "left").select(
         "query_id",
         "candidate_id",
         F.col("cand_label").alias("neg_label"),
@@ -326,6 +324,15 @@ def test_d36_mining_kernel_matches_declarative(spark):
         (F.col("best_pos") - F.col("cosine")).alias("margin"),
         F.col("rank").cast("int").alias("rank"),
     )
+
+
+def test_d36_mining_kernel_matches_declarative(spark):
+    """d36's local-top-k mining kernel must reproduce the declarative
+    probes x corpus join + window exactly — cosines, margins (NULL
+    when a probe has no same-label candidate), ranks, tie-breaks."""
+    from risk_dashboard_database_spark.plans import dedup
+
+    decl = _d36_declarative(spark, SF_DIR)
     key = lambda rows: {
         (r["query_id"], r["rank"]): (
             r["candidate_id"],
@@ -342,33 +349,37 @@ def test_d36_mining_kernel_matches_declarative(spark):
 
 
 def test_assign_arrow_rejects_null_vectors(spark, tmp_path, monkeypatch):
-    """A null embedding row must fail the IVF index build with a
-    descriptive error (before the kernel's flatten/reshape), not an
-    opaque reshape error or a silently wrong cell."""
+    """A null embedding row, or a zero one, must fail the IVF index
+    build with a descriptive error (before the kernel's flatten/reshape),
+    not an opaque reshape error or a silently wrong cell."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     import pytest
 
     from risk_dashboard_database_spark.plans import dedup, relcache
 
-    data = tmp_path / "data"
-    data.mkdir()
-    rows = [[float(i + 1), 1.0, 0.5, -0.25] for i in range(5)]
-    rows[3] = None
-    pq.write_table(
-        pa.table(
-            {
-                "vec_id": pa.array(range(5), pa.int64()),  # centroid: 0
-                "embedding": pa.array(rows, pa.list_(pa.float32())),
-                "label": pa.array([0] * 5, pa.int32()),
-            }
-        ),
-        data / "embeddings.parquet",
-    )
     monkeypatch.setattr(relcache, "MV_ROOT", str(tmp_path / "mv"))
-    relcache.clear()
-    try:
-        with pytest.raises(Exception, match="null vector or coordinate"):
-            dedup._ivf_assigned(spark, str(data)).collect()
-    finally:
+    for bad, message in (
+        (None, "null vector or coordinate"),
+        ([0.0] * 4, "zero-norm vector"),
+    ):
+        data = tmp_path / f"data-{message.split()[0]}"
+        data.mkdir()
+        rows = [[float(i + 1), 1.0, 0.5, -0.25] for i in range(5)]
+        rows[3] = bad
+        pq.write_table(
+            pa.table(
+                {
+                    "vec_id": pa.array(range(5), pa.int64()),  # centroid: 0
+                    "embedding": pa.array(rows, pa.list_(pa.float32())),
+                    "label": pa.array([0] * 5, pa.int32()),
+                }
+            ),
+            data / "embeddings.parquet",
+        )
         relcache.clear()
+        try:
+            with pytest.raises(Exception, match=message):
+                dedup._ivf_assigned(spark, str(data)).collect()
+        finally:
+            relcache.clear()

@@ -376,3 +376,41 @@ def test_u3_build_failure_releases_the_union_persist(spark, tmp_path, mv_root, m
             spark, os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.001")
         )
     assert jsc.getPersistentRDDs().size() == persisted
+
+
+def test_memo_hit_on_a_pruned_mv_rebuilds(spark, tmp_path, mv_root, monkeypatch):
+    """A session memo hit must not hand out a scan of files that
+    `_prune` deleted: with KEEP_DATASETS = 2, building a third dataset
+    prunes the first, and asking for the first again rebuilds it
+    instead of returning a scan that fails with FILE_NOT_EXIST."""
+    import os
+    import time
+
+    monkeypatch.setattr(relcache, "KEEP_DATASETS", 2)
+    dirs = []
+    for i in range(3):
+        d = tmp_path / f"ds{i}"
+        spark.range(10 + i).toDF("id").write.parquet(str(d))
+        dirs.append(str(d))
+    builds = []
+
+    def get(d):
+        def build():
+            builds.append(d)
+            return spark.read.parquet(d)
+
+        return relcache.cached_relation("k", d, build)
+
+    for i, d in enumerate(dirs):
+        get(d)
+        # distinct publish mtimes, oldest first, so the LRU prune is
+        # deterministic on a coarse-mtime filesystem
+        t = time.time() - (3 - i) * 10
+        os.utime(os.path.join(relcache.MV_ROOT, "k", relcache._fingerprint(d)), (t, t))
+    pruned = os.path.join(relcache.MV_ROOT, "k", relcache._fingerprint(dirs[0]))
+    assert not os.path.exists(pruned)  # test premise: ds0 was pruned
+
+    again = get(dirs[0])
+    assert again.count() == 10
+    assert builds == dirs + dirs[:1]
+    assert os.path.exists(os.path.join(pruned, "_SUCCESS"))
