@@ -935,12 +935,9 @@ def main() -> None:
     from risk_dashboard_database_spark.tables import load_table
 
     materialize(load_table(spark, sf_dir, "lineitem"))
-    try:
-        from risk_dashboard_database_spark.plans import relcache
+    from risk_dashboard_database_spark.plans import relcache
 
-        relcache._fingerprint(sf_dir)
-    except Exception:
-        pass
+    relcache._fingerprint(sf_dir)
 
     calib = _calibrate(spark)
 

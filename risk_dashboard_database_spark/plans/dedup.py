@@ -41,11 +41,13 @@ shard candidates and keep the same plan. d4 is quadratic by design
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.urls import url_hash
-from ..tables import load_table
+from ..tables import load_table, table_probe
 from .registry import query
 from .relcache import cached_relation, mv_step
 from ..vecops import collect_vectors, decode, fold_cos, fold_norm, probe_topk
@@ -666,8 +668,8 @@ def d49_cells(n: int) -> int:
 
 
 def _ivf_cells(spark: SparkSession, sf_dir: str) -> int:
-    """Deployed cell count for this dataset (memoized corpus count)."""
-    return d49_cells(_emb_count(spark, sf_dir))
+    """Deployed cell count for this dataset."""
+    return d49_cells(_emb_count(sf_dir))
 
 
 def _ivf_cells_sql(n_expr: str) -> str:
@@ -999,41 +1001,15 @@ _NBITS_CTE_SQL = """nb AS (
       FROM embeddings
     )"""
 
-_EMB_COUNT_MEMO: dict[tuple[str, str], int] = {}
-
-
-def _emb_count(spark: SparkSession, sf_dir: str) -> int:
-    """Embeddings row count for this dataset — one metadata-cheap
-    count per dataset CONTENT per process, shared by every
-    corpus-scaled width formula (sign-LSH nbits, IVF cell count).
-    Keyed on (realpath, stat signature of the dir's parquet files —
-    the same microseconds-cheap name/size/mtime probe relcache
-    revalidates with), so a dataset regenerated IN PLACE with a
-    different row count recounts immediately instead of silently
-    reusing a stale width while the oracle recomputes COUNT(*)
-    (ADVICE r10)."""
-    import os
-
-    from .relcache import _stat_sig
-
-    key = (os.path.realpath(sf_dir), _stat_sig(sf_dir))
-    if key not in _EMB_COUNT_MEMO:
-        # evict only THIS dir's stale signatures (a rewrite-in-place
-        # leaves the old print behind); other datasets' live entries
-        # survive. The size cap stays as a backstop for a process
-        # cycling many distinct dirs (code-review r11: a blanket
-        # clear() recounted every active dataset).
-        for k in [k for k in _EMB_COUNT_MEMO if k[0] == key[0]]:
-            del _EMB_COUNT_MEMO[k]
-        if len(_EMB_COUNT_MEMO) >= 16:
-            _EMB_COUNT_MEMO.pop(next(iter(_EMB_COUNT_MEMO)))
-        _EMB_COUNT_MEMO[key] = load_table(spark, sf_dir, "embeddings").count()
-    return _EMB_COUNT_MEMO[key]
+def _emb_count(sf_dir: str) -> int:
+    """Embeddings row count from the parquet footers (`table_probe`):
+    no Spark job, and a table rewritten in place recounts at once."""
+    return table_probe(os.path.join(sf_dir, "embeddings.parquet")).rows
 
 
 def _sign_bits(spark: SparkSession, sf_dir: str) -> int:
     """Corpus-scaled sign-LSH width: clamp(8, bitlen(n-1) - 6, 64)."""
-    n = _emb_count(spark, sf_dir)
+    n = _emb_count(sf_dir)
     return max(8, min(64, (max(n, 2) - 1).bit_length() - 6))
 
 

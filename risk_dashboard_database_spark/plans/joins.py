@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.joins import asof_join
-from ..tables import load_table
+from ..tables import load_table, table_probe
 from .registry import query
 
 DATE_FMT = "yyyy-MM-dd"
@@ -355,39 +355,15 @@ def _j12_pair_cap() -> int:
 # bound itself; the guard no longer reads it (it calls _j12_pair_cap()).
 J12_MAX_PAIRS_PER_KEY = J12_DEFAULT_PAIR_CAP
 
-# Guard-verdict memo: feed signature -> None (passed) | str (refusal
-# message). The signature is pure filesystem metadata of the events
-# source (relative path, size, mtime_ns per file) plus the cap — no
-# Spark job — so repeated executions of j12 over an unchanged feed pay
-# NOTHING for the guard, while a rewrite-in-place (same path, new
-# bytes) changes the mtime/size and forces a re-check. A hot feed's
-# refusal is memoized too: it keeps refusing without re-running the
-# bound job. Unbounded growth is impossible in practice (one entry per
-# distinct feed content seen by this process); a belt-and-braces cap
-# evicts oldest entries anyway.
-_J12_GUARD_MEMO: dict[tuple, str | None] = {}
-_J12_GUARD_MEMO_MAX = 256
-
-
-def _j12_feed_signature(sf_dir: str, cap: int) -> tuple:
-    """Filesystem signature of the events source under sf_dir: every
-    file's (relpath, size, mtime_ns), plus the cap. Cheap (one stat per
-    file, no Spark job) and content-faithful for the rewrite-in-place
-    case that matters."""
-    path = _os.path.join(sf_dir, "events.parquet")
-    entries: list[tuple] = []
-    if _os.path.isdir(path):
-        for root, _dirs, files in _os.walk(path):
-            for fn in sorted(files):
-                fp = _os.path.join(root, fn)
-                st = _os.stat(fp)
-                entries.append(
-                    (_os.path.relpath(fp, path), st.st_size, st.st_mtime_ns)
-                )
-    elif _os.path.exists(path):
-        st = _os.stat(path)
-        entries.append((_os.path.basename(path), st.st_size, st.st_mtime_ns))
-    return (_os.path.abspath(path), cap, tuple(entries))
+# Guard-verdict memo: events path -> ((stat signature, cap), verdict),
+# verdict None (passed) or the refusal message. The signature is the
+# events table's `table_probe` stat signature — filesystem metadata
+# only, no Spark job — so repeated executions of j12 over an unchanged
+# feed pay NOTHING for the guard, while a rewrite-in-place (same path,
+# new bytes) changes a part's mtime/size and forces a re-check. A hot
+# feed's refusal is memoized too: it keeps refusing without re-running
+# the bound job. One entry per path: a new signature or cap replaces it.
+_J12_GUARD_MEMO: dict[str, tuple[tuple, str | None]] = {}
 
 
 def _j12_pair_bounds(purchases: DataFrame, signups: DataFrame) -> DataFrame:
@@ -411,20 +387,23 @@ def _j12_skew_guard(
     purchases: DataFrame,
     signups: DataFrame,
     cap: int | None = None,
-    memo_key: tuple | None = None,
+    memo_key: tuple[str, tuple] | None = None,
 ) -> None:
     """Refuse a zipf-hot feed before any pair is built. When memo_key
-    (a `_j12_feed_signature`) is given, the verdict — pass OR refusal —
-    is cached, so repeat executions over an unchanged feed run no Spark
-    job at all; the guard's cost is once-per-feed-content, not
-    per-execution (VERDICT r12 #1: the guard's cost placement, not the
-    guard itself, was the round's only budget breach)."""
+    (the events path and its stat signature) is given, the verdict —
+    pass OR refusal — is cached for that signature and cap, so repeat
+    executions over an unchanged feed run no Spark job at all; the
+    guard's cost is once-per-feed-content, not per-execution (VERDICT
+    r12 #1: the guard's cost placement, not the guard itself, was the
+    round's only budget breach)."""
     cap = _j12_pair_cap() if cap is None else cap
-    if memo_key is not None and memo_key in _J12_GUARD_MEMO:
-        cached = _J12_GUARD_MEMO[memo_key]
-        if cached is not None:
-            raise ValueError(cached)
-        return
+    if memo_key is not None:
+        path, sig = memo_key
+        hit = _J12_GUARD_MEMO.get(path)
+        if hit is not None and hit[0] == (sig, cap):
+            if hit[1] is not None:
+                raise ValueError(hit[1])
+            return
     hot = (
         _j12_pair_bounds(purchases, signups)
         .where(F.col("pair_bound") > cap)
@@ -450,9 +429,7 @@ def _j12_skew_guard(
             "bounds."
         )
     if memo_key is not None:
-        if len(_J12_GUARD_MEMO) >= _J12_GUARD_MEMO_MAX:
-            _J12_GUARD_MEMO.pop(next(iter(_J12_GUARD_MEMO)))
-        _J12_GUARD_MEMO[memo_key] = msg
+        _J12_GUARD_MEMO[path] = ((sig, cap), msg)
     if msg is not None:
         raise ValueError(msg)
 
@@ -528,16 +505,16 @@ def j12_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair-count bound (one cheap agg) refuses a zipf-hot feed loudly
     before any pair is built (`_j12_skew_guard`); the disclosure card
     itself is j12b_attribution_skew. r13: the guard's verdict is
-    memoized on the feed's filesystem signature (+cap), so only the
+    memoized on the events probe's stat signature (+cap), so only the
     FIRST execution over a given feed content pays the bound job —
     repeat executions (a dashboard's reload loop, the bench harness's
     timing runs) pay zero. A rewrite-in-place changes size/mtime and
     re-arms the guard; a hot feed keeps refusing from cache."""
     ev = load_table(spark, sf_dir, "events")
     purchases, signups = _j12_sides(ev)
-    cap = _j12_pair_cap()
+    path = _os.path.join(sf_dir, "events.parquet")
     _j12_skew_guard(
-        purchases, signups, cap=cap, memo_key=_j12_feed_signature(sf_dir, cap)
+        purchases, signups, memo_key=(path, table_probe(path).sig)
     )
     return _j12_join(purchases, signups)
 

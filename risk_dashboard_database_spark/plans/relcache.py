@@ -24,16 +24,18 @@ MV store is a warehouse path, scans of it get partition pruning and
 column pruning for free, and an executor loss or new session never
 recompiles or repays the build.
 
-The store keys on a content fingerprint of the source dataset (file
-names, sizes, and head/tail byte hashes of every parquet in sf_dir).
-The fingerprint is memoized per sf_dir but REVALIDATED against a cheap
-stat signature (name/size/mtime) on every call, so a dataset
-regenerated mid-session is noticed immediately — regenerated-but-
-identical bytes reuse the store, any content change rebuilds. Publishes
-are atomic (write to a per-pid temp dir, os.rename into place); a
-bounded number of dataset fingerprints is kept per relation (LRU by
-mtime, refreshed on use) so test-tmp datasets cannot grow the store
-without bound.
+The store keys on a content fingerprint of the source dataset: the
+`tables.table_probe` fingerprint of every table in sf_dir, a file or a
+directory of parts (names, sizes, first 4 KiB and parquet footer of
+each part). Each probe is memoized per table and REVALIDATED against
+its stat signature (relpath/size/mtime per part) on every call, so a
+table regenerated or upserted mid-session is noticed immediately —
+regenerated-but-identical bytes reuse the store, any content change
+rebuilds. Publishes are atomic (write to a per-pid temp dir, os.rename
+into place); a bounded number of dataset fingerprints is kept per
+relation (LRU by mtime, refreshed on use) so test-tmp datasets cannot
+grow the store without bound, and the process memos drop what the
+store drops.
 
 Concurrency: inside one process, the miss -> build -> publish path of
 a (key, fingerprint) runs under that pair's lock, so threads that miss
@@ -65,6 +67,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..tables import table_probe
+
 # The store defaults to `.mvstore` at this checkout's root, so another
 # checkout (with other builders) never serves MVs built by this one.
 MV_ROOT = os.environ.get(
@@ -80,17 +84,12 @@ TMP_REAP_SECONDS = 6 * 3600
 
 # (key, fingerprint) -> scan DataFrame for this session. Nothing is
 # persisted in memory; this only avoids re-creating the reader on
-# every call.
+# every call. `_prune` drops the entries of the datasets it deletes.
 _CACHE: dict[tuple[str, str], DataFrame] = {}
 
-# sf_dir -> (stat signature, content fingerprint). The stat signature
-# (names/sizes/mtimes — microseconds to compute) is rechecked on every
-# call; the 8 KiB content reads rerun only when it changes.
-_FP: dict[str, tuple[str, str]] = {}
-
-# (key, fingerprint) -> the lock its builders take. Never cleared: a
-# lock dropped while held would let the next thread build beside its
-# holder. One entry per (key, dataset) the process has missed on.
+# (key, fingerprint) -> the lock its builders take. `_prune` drops the
+# entry of a dataset it deletes, but never a held lock: that would let
+# the next thread build beside its holder.
 _BUILD_LOCKS: dict[tuple[str, str], threading.Lock] = {}
 
 # Guards _BUILD_LOCKS and the read-only-store redirect of MV_ROOT.
@@ -121,73 +120,25 @@ def mv_step(
     return deco
 
 
-def _stat_sig(sf_dir: str) -> str:
-    try:
-        names = sorted(n for n in os.listdir(sf_dir) if n.endswith(".parquet"))
-    except OSError:
-        return "<nodir>"
-    parts = []
-    for n in names:
-        try:
-            st = os.stat(os.path.join(sf_dir, n))
-            parts.append(f"{n}:{st.st_size}:{st.st_mtime_ns}")
-        except OSError:
-            continue
-    return "|".join(parts)
-
-
-def _footer_bytes(f, size: int) -> bytes:
-    """The complete parquet footer metadata block. The file trailer is
-    ``<4-byte little-endian footer length><'PAR1'>``; the footer holds
-    every row group's column stats, offsets, and encodings, so ANY data
-    change — even one that preserves file size — changes these bytes.
-    Falls back to the last 4 KiB for non-parquet/truncated files."""
-    if size >= 8:
-        f.seek(size - 8)
-        trailer = f.read(8)
-        if trailer[4:] == b"PAR1":
-            flen = int.from_bytes(trailer[:4], "little")
-            if 0 < flen <= size - 8:
-                f.seek(size - 8 - flen)
-                return f.read(flen + 8)
-    f.seek(max(0, size - 4096))
-    return f.read(4096)
-
-
 def _fingerprint(sf_dir: str) -> str:
-    """Content fingerprint of a dataset dir: for every *.parquet, the
-    name, size, first 4 KiB, and the ENTIRE parquet footer (row-group
-    stats + offsets), so a mid-file data change that preserves size
-    still changes the print."""
-    sig = _stat_sig(sf_dir)
-    memo = _FP.get(sf_dir)
-    if memo is not None and memo[0] == sig:
-        return memo[1]
+    """Content fingerprint of a dataset dir: its path and the
+    `tables.table_probe` fingerprint of every `*.parquet` entry, a
+    file or a directory of parts."""
     h = hashlib.md5(os.path.abspath(sf_dir).encode())
     try:
         names = sorted(n for n in os.listdir(sf_dir) if n.endswith(".parquet"))
     except OSError:
         names = []
     for n in names:
-        p = os.path.join(sf_dir, n)
-        try:
-            size = os.path.getsize(p)
-            with open(p, "rb") as f:
-                head = f.read(4096)
-                footer = _footer_bytes(f, size)
-        except OSError:
-            continue
-        h.update(f"{n}:{size}:".encode())
-        h.update(hashlib.md5(head + footer).digest())
-    fp = h.hexdigest()[:16]
-    _FP[sf_dir] = (sig, fp)
-    return fp
+        h.update(table_probe(os.path.join(sf_dir, n)).fingerprint.encode())
+    return h.hexdigest()[:16]
 
 
 def _prune(key_dir: str, keep: str) -> None:
     """Drop oldest dataset materializations beyond KEEP_DATASETS (LRU
-    by dir mtime, which cached_relation refreshes on every use) and
-    reap orphaned temp dirs from crashed writers."""
+    by dir mtime, which cached_relation refreshes on every use), with
+    their process memo entries, and reap orphaned temp dirs from
+    crashed writers."""
     now = time.time()
     try:
         listing = os.listdir(key_dir)
@@ -212,8 +163,18 @@ def _prune(key_dir: str, keep: str) -> None:
         if d != keep:
             entries.append((mtime, d))
     entries.sort(reverse=True)
+    key = os.path.basename(key_dir)
     for _, d in entries[KEEP_DATASETS - 1 :]:
         shutil.rmtree(os.path.join(key_dir, d), ignore_errors=True)
+        _CACHE.pop((key, d), None)
+        # A lock fetched but not yet taken may go: at worst its holder
+        # builds beside a newcomer, and the atomic publish keeps the
+        # key whole, as between two processes.
+        with _LOCK:
+            lock = _BUILD_LOCKS.get((key, d))
+            if lock is not None and lock.acquire(blocking=False):
+                del _BUILD_LOCKS[(key, d)]
+                lock.release()
 
 
 def _pid_alive(tmp_dir_name: str) -> bool:
@@ -409,7 +370,6 @@ def clear() -> None:
     """Forget session-level reader handles (test isolation). Durable
     files stay — they are content-addressed, so reuse is always safe."""
     _CACHE.clear()
-    _FP.clear()
 
 
 def drop_store() -> None:

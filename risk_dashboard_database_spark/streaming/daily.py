@@ -14,9 +14,6 @@ is bounded at ~2 days x |entities|.
 
 from __future__ import annotations
 
-import glob
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -25,12 +22,13 @@ def read_events_stream(
     spark: SparkSession, events_dir: str, schema=None
 ) -> DataFrame:
     """readStream over an events parquet directory with the schema
-    derived from the files themselves (a batch-read footer probe —
-    the same per-file probe tables.load_table does). Testdata `ts` is
-    plain parquet timestamp[us] and is read natively; if a source ever
-    ships TIMESTAMP(NANOS) columns (read as long under the session's
-    nanosAsLong guard), they are truncated to micros here exactly like
-    the batch loaders do — so stream and batch always agree.
+    derived from the files themselves (a batch-read footer probe, and
+    the `tables.table_probe` that tables.load_table reads). Testdata
+    `ts` is plain parquet timestamp[us] and is read natively; if a
+    source ever ships TIMESTAMP(NANOS) columns (read as long under the
+    session's nanosAsLong guard), they are truncated to micros here
+    exactly like the batch loaders do — so stream and batch always
+    agree.
 
     To start the stream BEFORE any file has landed (the normal file-
     source pattern), pass `schema` explicitly — e.g.
@@ -38,7 +36,7 @@ def read_events_stream(
     empty directory has nothing to probe."""
     from pyspark.sql.types import TimestampNTZType
 
-    from ..tables import _nanos_ts_columns
+    from ..tables import table_probe
 
     if schema is None:  # not truthiness: an explicit empty StructType must error below, not silently re-probe
         schema = spark.read.parquet(events_dir).schema
@@ -50,9 +48,7 @@ def read_events_stream(
     # schema, not of this probe: a ns-typed file arriving LATER into a
     # natively-typed stream mismatches the declared schema and fails
     # the micro-batch loudly (never silently wrong values).
-    files = sorted(glob.glob(os.path.join(events_dir, "*.parquet")))
-    ns_cols = {c for f in files for c in _nanos_ts_columns(f)}
-    for c in sorted(ns_cols):
+    for c in table_probe(events_dir).ns_cols:
         ev = ev.withColumn(c, F.expr(f"timestamp_micros(CAST({c} DIV 1000 AS LONG))"))
     # Watermarks require TIMESTAMP (ltz); parquet timestamp[us] without
     # tz metadata reads as TIMESTAMP_NTZ. The session timezone is pinned

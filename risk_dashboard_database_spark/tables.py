@@ -5,6 +5,14 @@ The driver materializes a deterministic TPC-H-ish star schema plus an
 (TESTDATA.md). Every named query in plans/ takes (spark, sf_dir) and
 reads through these loaders.
 
+A table is `<sf_dir>/<name>.parquet`: one parquet file, or a directory
+of `*.parquet` parts (what `sources.sinks.merge_upsert` writes and what
+every table is at 100 TB). `table_probe(path)` is the one place that
+decides how a table's on-disk content is identified: its stat signature, its
+content fingerprint (which keys the MV store), its nanos-timestamp
+columns and its footer row and row-group counts. The loaders, the MV
+store, the corpus-scaled widths and the j12 guard all read it.
+
 Scale posture: each loader is a plain parquet scan, so Catalyst pushes
 filters/projections into the scan (PushedFilters/ReadSchema). At 100 TB
 the fact tables (lineitem/orders/events) would be date-partitioned on
@@ -25,7 +33,9 @@ files) the seam is a no-op probe.
 
 from __future__ import annotations
 
+import hashlib
 import os
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -100,48 +110,114 @@ _CLUSTER_KEY = {
 }
 
 
-def _nanos_ts_columns(path: str) -> list[str]:
-    """Columns stored as parquet TIMESTAMP(NANOS) — Spark can't read
-    them natively; we read them as long and truncate to micros (the
-    same truncation DuckDB applies when it loads ns into its us-
-    precision TIMESTAMP). Current testdata stores plain timestamp[us]
-    everywhere, so this probe returns [] and reads are native — it
-    stays as a guard so a ns-producing source can't silently break
-    the batch/stream loaders again."""
+class TableProbe(NamedTuple):
+    """What identifies one table's on-disk content. `sig` holds
+    (relpath, size, mtime_ns) for each part, relpath taken from the
+    table's parent dir; the other fields are read from the parts once
+    per `sig`."""
+
+    sig: tuple[tuple[str, int, int], ...]
+    # md5 of each part's relpath, size, first 4 KiB and whole footer
+    fingerprint: str
+    # TIMESTAMP(NANOS) columns: Spark reads them as long (the session's
+    # nanosAsLong guard) and the readers truncate them to micros, as
+    # DuckDB does. Testdata stores timestamp[us], so this is empty.
+    ns_cols: tuple[str, ...]
+    rows: int
+    row_groups: int
+
+
+# path -> its TableProbe. load_table runs on every plan construction,
+# so the probe is memoized and revalidated by its stat signature (one
+# stat per part): a table rewritten in place re-probes at once and
+# REPLACES its entry, so the memo holds one entry per path however
+# often a table is rewritten. The raw reader DataFrame is memoized the same way on the
+# session object (it dies with the session; DataFrames are immutable,
+# so handing out one instance is safe).
+_META_MEMO: dict[str, TableProbe] = {}
+
+
+def _parts(path: str) -> list[str]:
+    """A table's data files, relative to the table's parent dir: the
+    file `path`, or every `*.parquet` under the directory `path`,
+    skipping `_`- and `.`-prefixed names as Spark's reader does."""
+    if not os.path.isdir(path):
+        return [os.path.basename(path)]
+    parts = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        rel = os.path.relpath(root, os.path.dirname(path))
+        parts += [
+            os.path.join(rel, f)
+            for f in files
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        ]
+    return sorted(parts)
+
+
+def _footer_bytes(f, size: int) -> bytes:
+    """The complete parquet footer metadata block. The file trailer is
+    ``<4-byte little-endian footer length><'PAR1'>``; the footer holds
+    every row group's column stats, offsets, and encodings, so ANY data
+    change — even one that preserves file size — changes these bytes.
+    Falls back to the last 4 KiB for non-parquet/truncated files."""
+    if size >= 8:
+        f.seek(size - 8)
+        trailer = f.read(8)
+        if trailer[4:] == b"PAR1":
+            flen = int.from_bytes(trailer[:4], "little")
+            if 0 < flen <= size - 8:
+                f.seek(size - 8 - flen)
+                return f.read(flen + 8)
+    f.seek(max(0, size - 4096))
+    return f.read(4096)
+
+
+def table_probe(path: str) -> TableProbe:
+    """The TableProbe of the table at `path`, one parquet file or a
+    directory of parts. A missing path probes as a table with no
+    parts. Costs one stat per part while the signature holds; on a
+    change it reads each part's head and footer, and no Spark job."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
     import pyarrow.types as pat
 
-    schema = pq.read_schema(path)
-    return [
-        f.name
-        for f in schema
-        if pat.is_timestamp(f.type) and f.type.unit == "ns"
-    ]
-
-
-# r15 (guide §5/§7.3 — driver-side overhead is real latency): load_table
-# used to pay ~70 ms of pure plan-construction cost on EVERY call even
-# when everything was warm — two conf round-trips, a pyarrow schema
-# probe, a pyarrow footer-metadata probe, and a fresh spark.read — and
-# the bench rebuilds each query's plan per timed run, so that tax landed
-# on every query multiple times. The file probes are now memoized per
-# path as (stat signature, values) — relcache's `_FP` discipline: a
-# regenerated dataset re-probes immediately and REPLACES its entry, so
-# the memo holds one entry per path however often a file is rewritten.
-# The conf guard runs once per session, and the raw reader DataFrame is
-# memoized the same way on the session object (it dies with the
-# session; DataFrames are immutable, so handing the same instance out
-# is safe). Re-laid-out facts defer the raw read into the relayout
-# build closure, which never runs when the layout MV is store-warm.
-_META_MEMO: dict[str, tuple[str, list[str], int]] = {}
-
-
-def _stat_sig_one(path: str) -> str:
-    try:
-        st = os.stat(path)
-        return f"{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        return "<none>"
+    base = os.path.dirname(path)
+    stats = []
+    for rel in _parts(path):
+        try:
+            st = os.stat(os.path.join(base, rel))
+        except OSError:  # removed since the listing
+            continue
+        stats.append((rel, st.st_size, st.st_mtime_ns))
+    sig = tuple(stats)
+    hit = _META_MEMO.get(path)
+    if hit is not None and hit.sig == sig:
+        return hit
+    h = hashlib.md5()
+    ns_cols: dict[str, None] = {}
+    rows = groups = 0
+    for rel, size, _ in sig:
+        try:
+            with open(os.path.join(base, rel), "rb") as f:
+                head = f.read(4096)
+                footer = _footer_bytes(f, size)
+        except OSError:  # removed since the stat
+            continue
+        h.update(f"{rel}:{size}:".encode())
+        h.update(hashlib.md5(head + footer).digest())
+        try:
+            md = pq.read_metadata(pa.BufferReader(footer))
+        except (OSError, pa.ArrowInvalid):  # not a complete parquet file
+            continue
+        rows += md.num_rows
+        groups += md.num_row_groups
+        for fld in md.schema.to_arrow_schema():
+            if pat.is_timestamp(fld.type) and fld.type.unit == "ns":
+                ns_cols[fld.name] = None
+    out = TableProbe(sig, h.hexdigest(), tuple(ns_cols), rows, groups)
+    _META_MEMO[path] = out
+    return out
 
 
 def _session_memo(spark: SparkSession) -> dict:
@@ -152,7 +228,7 @@ def _session_memo(spark: SparkSession) -> dict:
     return memo
 
 
-def _raw_reader(spark: SparkSession, path: str, ns_cols: list[str]) -> DataFrame:
+def _raw_reader(spark: SparkSession, path: str, ns_cols: tuple[str, ...]) -> DataFrame:
     df = spark.read.parquet(path)
     for c in ns_cols:
         df = df.withColumn(c, F.expr(f"timestamp_micros(CAST({c} DIV 1000 AS LONG))"))
@@ -176,23 +252,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         memo["confs_set"] = True
-    sig = _stat_sig_one(path)
-    meta = _META_MEMO.get(path)
-    if meta is None or meta[0] != sig:
-        n = _relayout_parts(path, name) if name in FACT_TABLES else 0
-        meta = _META_MEMO[path] = (sig, _nanos_ts_columns(path), n)
-    _, ns_cols, n = meta
+    meta = table_probe(path)
+    n = _relayout_parts(meta, name) if name in FACT_TABLES else 0
     if n >= 2:
-        return _relayout(spark, name, sf_dir, path, ns_cols, n)
+        return _relayout(spark, name, sf_dir, path, meta.ns_cols, n)
     key = ("reader", path)
     hit = memo.get(key)
-    if hit is None or hit[0] != sig:
-        hit = (sig, _raw_reader(spark, path, ns_cols))
+    if hit is None or hit[0] != meta.sig:
+        hit = (meta.sig, _raw_reader(spark, path, meta.ns_cols))
         memo[key] = hit
     return hit[1]
 
 
-def _relayout_parts(path: str, name: str) -> int:
+def _relayout_parts(meta: TableProbe, name: str) -> int:
     """How many scan splits this fact table SHOULD have, or 0 if its
     files are already scan-parallel. The reference engine owns its
     storage layout (CSV -> Postgres load); our analog is re-laying-out
@@ -201,13 +273,7 @@ def _relayout_parts(path: str, name: str) -> int:
     well-sized files and this probe returns 0 — the seam only repairs
     small-but-unsplittable local data, it never touches data that
     already parallelizes."""
-    import pyarrow.parquet as pq
-
-    try:
-        md = pq.ParquetFile(path).metadata
-    except Exception:
-        return 0
-    rows, groups = md.num_rows, max(md.num_row_groups, 1)
+    rows, groups = meta.rows, max(meta.row_groups, 1)
     min_rows = _RELAYOUT_MIN_ROWS.get(name, _RELAYOUT_MIN_ROWS_DEFAULT)
     mono = _RELAYOUT_MONO_ROWS.get(name, _RELAYOUT_MONO_ROWS_DEFAULT)
     target = _RELAYOUT_TARGET_ROWS.get(name, _RELAYOUT_TARGET_ROWS_DEFAULT)
@@ -218,7 +284,7 @@ def _relayout_parts(path: str, name: str) -> int:
 
 def _relayout(
     spark: SparkSession, name: str, sf_dir: str, path: str,
-    ns_cols: list[str], n: int,
+    ns_cols: tuple[str, ...], n: int,
 ) -> DataFrame:
     """Serve the table from a range-clustered n-file copy in the
     durable MV store (content-addressed: source regeneration

@@ -27,11 +27,14 @@ def test_j12_guard_memoized_pass_runs_no_second_job(spark, monkeypatch):
     replaced with a bomb and the guard must still return cleanly."""
     from risk_dashboard_database_spark.plans import joins
 
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
+    from risk_dashboard_database_spark.tables import table_probe
+
+    path = f"{SF_DIR}/events.parquet"
+    ev = spark.read.parquet(path)
     purchases, signups = joins._j12_sides(ev)
-    key = joins._j12_feed_signature(SF_DIR, 10_000_000)
+    key = (path, table_probe(path).sig)
     joins._j12_skew_guard(purchases, signups, cap=10_000_000, memo_key=key)
-    assert joins._J12_GUARD_MEMO[key] is None
+    assert joins._J12_GUARD_MEMO[path] == ((key[1], 10_000_000), None)
 
     def _bomb(*_a, **_k):  # pragma: no cover - must never run
         raise AssertionError("guard re-ran a Spark job on a memo hit")
@@ -48,10 +51,10 @@ def test_j12_guard_refusal_is_memoized_and_still_refuses(spark, monkeypatch):
 
     ev = _hot_events(spark, 60, 60)
     purchases, signups = joins._j12_sides(ev)
-    key = ("synthetic-hot-feed", 1000, ())
+    key = ("synthetic-hot-feed", ())
     with pytest.raises(ValueError, match=r"user 7: 60x60=3600"):
         joins._j12_skew_guard(purchases, signups, cap=1000, memo_key=key)
-    assert isinstance(joins._J12_GUARD_MEMO[key], str)
+    assert isinstance(joins._J12_GUARD_MEMO["synthetic-hot-feed"][1], str)
 
     def _bomb(*_a, **_k):  # pragma: no cover
         raise AssertionError("refusal memo hit re-ran the bound job")
@@ -61,26 +64,35 @@ def test_j12_guard_refusal_is_memoized_and_still_refuses(spark, monkeypatch):
         joins._j12_skew_guard(purchases, signups, cap=1000, memo_key=key)
 
 
-def test_j12_feed_signature_changes_on_rewrite_in_place(tmp_path):
+def test_j12_feed_signature_changes_on_rewrite_in_place(tmp_path, monkeypatch):
     """Rewrite-in-place (same path, new bytes) must re-arm the guard:
-    the signature covers every file's size and mtime_ns, so copying a
-    different parquet over the same name changes the key."""
+    the events probe's stat signature covers every file's size and
+    mtime_ns, so copying a different parquet over the same name changes
+    the key."""
     from risk_dashboard_database_spark.plans import joins
+    from risk_dashboard_database_spark.tables import table_probe
 
     sf = tmp_path / "sf"
     sf.mkdir()
     dst = sf / "events.parquet"
     shutil.copyfile(f"{SF_DIR}/events.parquet", dst)
-    sig1 = joins._j12_feed_signature(str(sf), 1000)
+    sig1 = table_probe(str(dst)).sig
     # Same content, bumped mtime: a rewrite-in-place is indistinguishable
     # from this at the filesystem-metadata level, and must re-check.
     st = os.stat(dst)
     os.utime(dst, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
-    sig2 = joins._j12_feed_signature(str(sf), 1000)
+    sig2 = table_probe(str(dst)).sig
     assert sig1 != sig2
     # And the cap is part of the key: overriding SPARK_GRAFT_J12_PAIR_CAP
     # never serves a verdict computed under a different bound.
-    assert joins._j12_feed_signature(str(sf), 2000) != sig2
+    joins._J12_GUARD_MEMO[str(dst)] = ((sig2, 1000), None)
+
+    def _bomb(*_a, **_k):
+        raise AssertionError("guard re-ran the bound job")
+
+    monkeypatch.setattr(joins, "_j12_pair_bounds", _bomb)
+    with pytest.raises(AssertionError, match="re-ran the bound job"):
+        joins._j12_skew_guard(None, None, cap=2000, memo_key=(str(dst), sig2))
 
 
 def test_j12_pair_cap_reads_env_at_call_time(monkeypatch):

@@ -93,12 +93,10 @@ def test_fingerprint_sees_size_preserving_data_change(tmp_path):
         )
 
     write([1, 2, 3, 4, 5, 6, 7, 8])
-    relcache._FP.clear()
     fp1 = relcache._fingerprint(str(d))
     size1 = (d / "t.parquet").stat().st_size
 
     write([1, 2, 3, 4, 5, 6, 7, 9])  # same size, one value differs
-    relcache._FP.clear()
     fp2 = relcache._fingerprint(str(d))
     assert (d / "t.parquet").stat().st_size == size1  # test premise
     assert fp1 != fp2
@@ -414,3 +412,34 @@ def test_memo_hit_on_a_pruned_mv_rebuilds(spark, tmp_path, mv_root, monkeypatch)
     assert again.count() == 10
     assert builds == dirs + dirs[:1]
     assert os.path.exists(os.path.join(pruned, "_SUCCESS"))
+
+
+def test_memos_hold_no_more_datasets_than_the_store(spark, tmp_path, mv_root):
+    """`_prune` drops the scan and the build lock of each dataset dir
+    it deletes, so the process memos of one key stay within
+    KEEP_DATASETS however many datasets a long-lived process serves."""
+    for i in range(relcache.KEEP_DATASETS + 1):
+        d = str(tmp_path / f"ds{i}")
+        spark.range(10 + i).toDF("id").write.parquet(d)
+        relcache.cached_relation("memo_bound", d, lambda d=d: spark.read.parquet(d))
+    for memo in (relcache._CACHE, relcache._BUILD_LOCKS):
+        assert len([k for k in memo if k[0] == "memo_bound"]) <= relcache.KEEP_DATASETS
+
+
+def test_prune_keeps_a_held_build_lock(spark, tmp_path, mv_root, monkeypatch):
+    """A build lock that a thread holds is never dropped, even when its
+    dataset dir is pruned: the next miss must queue behind the holder,
+    not build beside it."""
+    import os
+
+    monkeypatch.setattr(relcache, "KEEP_DATASETS", 1)
+    d = str(tmp_path / "ds")
+    spark.range(3).toDF("id").write.parquet(d)
+    relcache.cached_relation("held", d, lambda: spark.read.parquet(d))
+    fp = relcache._fingerprint(d)
+    key_dir = os.path.join(relcache.MV_ROOT, "held")
+    lock = relcache._BUILD_LOCKS[("held", fp)]
+    with lock:
+        relcache._prune(key_dir, keep="other")
+    assert not os.path.exists(os.path.join(key_dir, fp))  # test premise
+    assert relcache._BUILD_LOCKS[("held", fp)] is lock
